@@ -165,6 +165,18 @@ def check_ranking(
                   f"{what}: rank {i + 1} not in (score desc, docint desc) order")
 
 
+
+def check_same_answers(
+    what: str,
+    before: list[tuple[int, int, float]],
+    after: list[tuple[int, int, float]],
+) -> None:
+    """The same query, asked before and after a change that must not alter
+    answers (compaction): the same turns with the same docints, in order."""
+    check([(t, d) for t, d, _ in before] == [(t, d) for t, d, _ in after],
+          f"{what}: answer changed")
+
+
 # -- segment files -----------------------------------------------------------
 
 

@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
 """Run workloads repeatedly, alternating between them, and summarize.
 
-    python3 perfbench/repeat.py --runs 10 --seconds 20 [--workloads build serve ingest]
-        [--trace 0] [--first-seed 1] [--out results.jsonl]
+    python3 perfbench/repeat.py --runs 10 --seconds 26 [--workloads serve ingest]
+        [--trace 0] [--first-seed 1] [--out results.jsonl] [--small]
 
 Run ``i`` of every workload uses seed ``first_seed + i``. For each workload
 and metric it prints the median, the quartiles (``statistics.quantiles(n=4)``)
@@ -20,16 +20,21 @@ import sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
+sys.path.insert(0, HERE)
+
+from run import PLANS  # noqa: E402
 
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--runs", type=int, default=10)
-    ap.add_argument("--seconds", type=float, default=20)
-    ap.add_argument("--workloads", nargs="+", default=["build", "serve", "ingest"])
+    ap.add_argument("--seconds", type=float, default=26)
+    ap.add_argument("--workloads", nargs="+", choices=sorted(PLANS),
+                    default=sorted(PLANS, reverse=True))
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--first-seed", type=int, default=1)
     ap.add_argument("--out", help="append each run's result line here (JSON lines)")
+    ap.add_argument("--small", action="store_true", help="pass --small to every run")
     args = ap.parse_args()
 
     results: dict[str, list[dict]] = {w: [] for w in args.workloads}
@@ -38,7 +43,7 @@ def main() -> int:
         for w in args.workloads:
             cmd = [sys.executable, os.path.join(HERE, "run.py"), "--workload", w,
                    "--seed", str(seed), "--seconds", str(args.seconds),
-                   "--trace", str(args.trace)]
+                   "--trace", str(args.trace)] + ["--small"] * args.small
             p = subprocess.run(cmd, cwd=ROOT, stdout=subprocess.PIPE,
                                stderr=subprocess.DEVNULL, text=True)
             lines = p.stdout.strip().splitlines()

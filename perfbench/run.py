@@ -3,27 +3,29 @@
 
 Run from the repository root::
 
-    python3 perfbench/run.py --workload serve --seed 1 --seconds 30 --trace 0
+    python3 perfbench/run.py --workload serve --seed 1 --seconds 26 --trace 0
 
-Every workload runs the same three phases against the engine's public API,
-in one Spark session at ``local[<cores>]``, and differs in how many
-operations each phase gets (see ``PLANS`` and the README):
+Every workload runs the same four phases against the engine's public API,
+in one Spark session at ``local[<cores>]``, so that every result line
+carries every end-to-end metric:
 
 - build:  ``InvertedIndex.build_persisted(positions=True)`` over the
   benchmark's parquet transcripts table;
-- serve:  ``InvertedIndex.load`` once, then a one-client closed loop of
-  ``search`` over 13 query shapes, then ``search_batch`` ticks of one query
-  per shape;
-- ingest: cycles on a ``SegmentStore``: ``append`` a batch, fresh queries
+- round:  a one-client closed loop of ``search`` + collect, one query per
+  shape, on the index loaded once with ``InvertedIndex.load``;
+- tick:   ``search_batch`` of one query per shape;
+- cycle:  on a ``SegmentStore``: ``append`` a batch, fresh queries
   (``SegmentStore.load()`` + ``search`` + collect), ``compact``, the same
   queries again.
 
-After the workload's fixed operations, its own phase repeats until
-``--seconds`` have passed since measuring began. Every answer is checked
-against ``oracle.py``. The last stdout line is one JSON object:
-``{"correct", "attempted", "failed", "metrics"}``; ``--trace 0`` reports the
-end-to-end metrics, ``--trace 1`` the per-layer ones (see ``layers.py``).
-``--small`` runs a tiny corpus with the same phases and checks.
+Each workload runs every other phase once, in that order, and then its own
+phase (``Plan.own``) at least once and until ``--seconds`` have passed since
+measuring began: serve repeats query rounds, ingest store cycles.
+Every answer is checked against ``oracle.py``. The last stdout line is one
+JSON object: ``{"correct", "attempted", "failed", "metrics"}``;
+``--trace 0`` reports the end-to-end metrics, ``--trace 1`` the per-layer
+ones (see ``layers.py``). ``--small`` runs a tiny corpus with the same
+phases and checks.
 """
 
 from __future__ import annotations
@@ -36,7 +38,7 @@ import statistics
 import sys
 import time
 import traceback
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -55,23 +57,26 @@ def process_start_time() -> float:
 class Plan:
     n_main: int  # turns in the transcripts table (build input, served index)
     shards: int  # SegmentStore shards
-    builds: int  # measured build_persisted calls
-    rounds: int  # closed-loop rounds of one single query per shape
-    ticks: int  # search_batch ticks
-    cycles: int  # append + fresh queries + compact + fresh queries
-    append_turns: int
+    append_turns: int  # turns per appended batch
+    own: str  # the phase that repeats until --seconds: "round" or "cycle"
 
 
 FRESH_SHAPES = ("term_head", "and2", "or2")
 
+# One run of each other phase fills its metrics; the workload's own phase
+# gets the rest of the run. Serve's store only fills the store metrics;
+# ingest's has more shards, where append's per-shard cost shows.
 PLANS = {
-    "serve": Plan(n_main=8_000, shards=2, builds=2, rounds=4, ticks=2,
-                  cycles=3, append_turns=1_000),
-    "ingest": Plan(n_main=8_000, shards=2, builds=3, rounds=2, ticks=2,
-                   cycles=3, append_turns=1_000),
+    "serve": Plan(n_main=8_000, shards=2, append_turns=1_000, own="round"),
+    "ingest": Plan(n_main=8_000, shards=3, append_turns=1_000, own="cycle"),
 }
-SMALL = Plan(n_main=1_500, shards=2, builds=1, rounds=1, ticks=1,
-             cycles=1, append_turns=300)
+
+
+def small(plan: Plan) -> Plan:
+    """The self-test size of a workload: same phases, smaller inputs."""
+    return replace(plan, n_main=1_500, append_turns=300)
+
+
 # compact() tiers units by log_{merge_factor}(max(bytes, min_bytes)); a
 # floor above every unit's size puts a shard's units in one tier, so with
 # merge_factor=2 each cycle merges a shard's unit and its new delta.
@@ -127,23 +132,18 @@ class Bench:
         rng = np.random.default_rng(self.args.seed)
         p = self.plan
         self.vocab = corpus.vocabulary(rng)
-        cdf = corpus.zipf_cdf()
-        self.main, conv = corpus.make_turns(rng, p.n_main, 0, cdf)
-        self.batches = []
-        for _ in range(p.cycles):
-            b, conv = corpus.make_turns(rng, p.append_turns, conv, cdf)
-            self.batches.append(b)
+        self.cdf = corpus.zipf_cdf()
+        self.main, self.next_conv = corpus.make_turns(rng, p.n_main, 0, self.cdf)
+        # Append batches come from their own stream, made as cycles need
+        # them: batch i is the same for a seed however many cycles run.
+        self.batch_rng = np.random.default_rng([self.args.seed, 1])
         self.main_oracle = Oracle(self.main, self.vocab)
-        n_rounds = p.rounds + p.ticks + p.cycles + 64
+        self.main_key = {(c, int(t)): i for i, (c, t) in
+                         enumerate(zip(self.main.conv_id, self.main.turn_idx))}
         self.rounds = corpus.make_queries(
-            rng, self.vocab, self.main, self.main_oracle.df, n_rounds)
+            rng, self.vocab, self.main, self.main_oracle.df, 64)
         self.table = os.path.join(self.work, "transcripts.parquet")
         self.main.write_parquet(self.table, self.vocab)
-        self.batch_paths = []
-        for i, b in enumerate(self.batches):
-            path = os.path.join(self.work, f"append_{i}.parquet")
-            b.write_parquet(path, self.vocab)
-            self.batch_paths.append(path)
 
         from spans import NoSpans, SparkSpans
         from miru_spark.index import InvertedIndex
@@ -164,6 +164,8 @@ class Bench:
         self.store = SegmentStore(
             self.spark, os.path.join(self.work, "store"), n_shards=p.shards)
         self.store.build(turns)
+        self.store_turns, self.store_oracle = self.main, self.main_oracle
+        self.store_key = self.main_key
         self.next_round = 0
         self.setup_s = time.time() - t_proc
         log(f"set-up {self.setup_s:.1f} s (session start {self.session_start_s:.1f} s)")
@@ -297,35 +299,37 @@ class Bench:
         self.store_key = {(c, int(t)): i for i, (c, t) in
                           enumerate(zip(turns.conv_id, turns.turn_idx))}
 
-    def run_ingest(self) -> None:
-        """Cycles of: append a batch, one fresh-query pass, compact, the
-        same pass again (answers must not change)."""
+    def run_cycle(self) -> None:
+        """Append a new batch, one fresh-query pass, compact, the same pass
+        again (answers must not change)."""
         import corpus
-        from oracle import check, dir_bytes
+        from oracle import check, check_same_answers, dir_bytes
 
-        self._set_store_turns(self.main)
-        for i, path in enumerate(self.batch_paths):
-            batch = self.spark.read.parquet(path)
-            _, sp = self.op("incremental.append", lambda: self.store.append(batch))
-            self.add("append_s", sp.wall_s)
-            self.add("append_span", sp)
-            self._set_store_turns(corpus.concat([self.store_turns, self.batches[i]]))
-            rnd, want = self.fresh_pass()
-            before = set(self.store.live_units())
-            _, sp = self.op("incremental.compact", lambda: self.store.compact(
-                merge_factor=2, min_bytes=COMPACT_MIN_BYTES))
-            after = set(self.store.live_units())
-            self.add("compact_span", sp)
-            check(len(after) < len(before),
-                  f"compact: live units {len(before)} -> {len(after)}")
-            n = len(self.store_turns)
-            self.units = (len(before), len(after))
-            self.store_bytes_per_turn = sum(dir_bytes(u) for u in after) / n
-            self.add("compact_written", sum(dir_bytes(u) for u in after - before) / n)
-            _, got = self.fresh_pass(rnd)
-            for (shape, _, _), a, b in zip(rnd, want, got):
-                check([(t, d) for t, d, _ in a] == [(t, d) for t, d, _ in b],
-                      f"compact changed the answer of {shape}")
+        p = self.plan
+        batch, self.next_conv = corpus.make_turns(
+            self.batch_rng, p.append_turns, self.next_conv, self.cdf)
+        path = os.path.join(self.work, f"append_{self.next_conv}.parquet")
+        batch.write_parquet(path, self.vocab)
+        new = self.spark.read.parquet(path)
+        _, sp = self.op("incremental.append", lambda: self.store.append(new))
+        self.add("append_s", sp.wall_s)
+        self.add("append_span", sp)
+        self._set_store_turns(corpus.concat([self.store_turns, batch]))
+        rnd, want = self.fresh_pass()
+        before = set(self.store.live_units())
+        _, sp = self.op("incremental.compact", lambda: self.store.compact(
+            merge_factor=2, min_bytes=COMPACT_MIN_BYTES))
+        after = set(self.store.live_units())
+        self.add("compact_span", sp)
+        check(len(after) < len(before),
+              f"compact: live units {len(before)} -> {len(after)}")
+        n = len(self.store_turns)
+        self.units = (len(before), len(after))
+        self.store_bytes_per_turn = sum(dir_bytes(u) for u in after) / n
+        self.add("compact_written", sum(dir_bytes(u) for u in after - before) / n)
+        _, got = self.fresh_pass(rnd)
+        for (shape, _, _), a, b in zip(rnd, want, got):
+            check_same_answers(f"compact: {shape}", a, b)
 
     # -- measurement --------------------------------------------------------
 
@@ -333,29 +337,34 @@ class Bench:
         from miru_spark.index import InvertedIndex
 
         p = self.plan
-        self.main_key = {(c, int(t)): i for i, (c, t) in
-                         enumerate(zip(self.main.conv_id, self.main.turn_idx))}
-        t0 = time.perf_counter()
-        for _ in range(p.builds):
-            self.run_build()
-        log(f"build phase {time.perf_counter() - t0:.1f} s")
         with self.spans.span("index.load") as sp:
             self.index = InvertedIndex.load(self.spark, self.served_dir)
         self.load_s = sp.wall_s
-        for _ in range(p.rounds):
-            self.run_serve_round()
-        for _ in range(p.ticks):
-            self.run_tick()
-        log(f"serve phase done at {time.perf_counter() - t0:.1f} s")
-        self.run_ingest()
-        log(f"ingest phase done at {time.perf_counter() - t0:.1f} s")
-        top_up = {
-            "serve": self.run_serve_round,
-            "ingest": self.fresh_pass,
-        }[self.args.workload]
+        phases = {"build": self.run_build, "round": self.run_serve_round,
+                  "tick": self.run_tick, "cycle": self.run_cycle}
+        spent = dict.fromkeys(phases, 0.0)
+        runs = dict.fromkeys(phases, 0)
+        t0 = time.perf_counter()
+
+        def once(name):
+            t = time.perf_counter()
+            phases[name]()
+            spent[name] += time.perf_counter() - t
+            runs[name] += 1
+
+        for name in phases:
+            if name != p.own:
+                once(name)
+        once(p.own)
         while time.perf_counter() - t0 < self.args.seconds:
-            top_up()
-        log(f"measured {time.perf_counter() - t0:.1f} s")
+            once(p.own)
+        total = time.perf_counter() - t0
+        log("samples " + json.dumps({
+            k: [round(x, 4) for x in v] for k, v in self.samples.items()
+            if k.endswith(("_s", "_ms"))}))
+        log(f"measured {total:.1f} s: " + ", ".join(
+            f"{name} {runs[name]}x {spent[name]:.1f} s ({spent[name] / total:.0%})"
+            for name in phases))
 
     def e2e(self) -> dict:
         s = self.samples
@@ -402,7 +411,8 @@ def main() -> int:
 
     from oracle import CheckFailed
 
-    bench = Bench(args, SMALL if args.small else PLANS[args.workload], work)
+    plan = PLANS[args.workload]
+    bench = Bench(args, small(plan) if args.small else plan, work)
     result, status = None, 1
     try:
         bench.setup(t_proc)
@@ -416,12 +426,13 @@ def main() -> int:
     finally:
         t0 = time.perf_counter()
         stop_spark(bench)
+        t_stop = time.perf_counter() - t0
         shutil.rmtree(work, ignore_errors=True)
         try:
             os.rmdir(os.path.dirname(work))
         except OSError:
             pass
-        log(f"teardown {time.perf_counter() - t0:.1f} s; process "
+        log(f"teardown {time.perf_counter() - t0:.1f} s (Spark stop {t_stop:.1f} s); process "
             f"{time.time() - t_proc:.1f} s")
     if result is not None:
         print(json.dumps(result))
