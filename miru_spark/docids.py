@@ -32,6 +32,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: conv relations up to this many conversations (~90 B a row at a dozen
+#: turns: well under the session's 64 MiB broadcast threshold) are
+#: broadcast explicitly — see with_docint
+BROADCAST_MAX_CONVS = 500_000
+
 # DuckDB twin used by oracle_sql() strings; {src} is the transcripts relation.
 DUCKDB_DOCINT = """
 SELECT t.*,
@@ -62,12 +67,29 @@ def with_docint(turns: DataFrame) -> DataFrame:
     uses so the sampled partitioning is computed once (eviction replays
     the same lineage, which is safe). The global-sort fraction of the
     job is the convs relation — 3-4 orders of magnitude smaller than
-    turns — and even that is spread over P tasks.
+    turns — and even that is spread over P tasks. The persisted
+    relation rides on the result; :func:`release_docint` frees it once
+    the result has been written or cached.
+
+    Duplicate ``(conv_id, turn_idx)`` keys fail the call (the conv-level
+    aggregate raises while the totals are collected — no extra job):
+    they would otherwise alias one docint.
     """
     spark = turns.sparkSession
+    tix = F.sort_array(F.collect_list("turn_idx"))
     convs = turns.groupBy("conv_id").agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sort_array(F.collect_list("turn_idx")).alias("_tix"),
+        F.when(
+            F.size(tix) != F.size(F.array_distinct(tix)),
+            F.raise_error(
+                F.concat(
+                    F.lit("duplicate (conv_id, turn_idx) key in conv_id "),
+                    F.col("conv_id").cast("string"),
+                )
+            ),
+        )
+        .otherwise(F.count(F.lit(1)))
+        .alias("_n"),
+        tix.alias("_tix"),
     )
     p = max(spark.sparkContext.defaultParallelism, 2)
     local = (
@@ -80,7 +102,13 @@ def with_docint(turns: DataFrame) -> DataFrame:
         .orderBy("conv_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    totals = local.groupBy("_pid").agg(F.sum("_n").alias("_t")).collect()
+    try:
+        totals = local.groupBy("_pid").agg(
+            F.sum("_n").alias("_t"), F.count(F.lit(1)).alias("_c")
+        ).collect()
+    except Exception:
+        local.unpersist()
+        raise
     acc = 0
     bases = []
     for r in sorted(totals, key=lambda r: r["_pid"]):
@@ -109,10 +137,15 @@ def with_docint(turns: DataFrame) -> DataFrame:
     # conv relation under the broadcast threshold the turns side of
     # this join is completely exchange-free; above it, Catalyst falls
     # back to the same conv_id hash shuffle the window needed anyway —
-    # never worse. Duplicate (conv_id, turn_idx) keys — a violation of
-    # the store's key invariant, arbitrated upstream by
-    # watermark/repair — would map to one docint here rather than two.
-    return (
+    # never worse. The broadcast is explicit when the conv count (known
+    # from the totals) is small: left to the adaptive planner, the same
+    # store append on the same input wrote 1 or 3 files per table from
+    # run to run, and the size-tiered merge plan (which reads unit
+    # bytes) changed with it. With the hint the turns always keep their
+    # own partitioning.
+    if sum(int(r["_c"]) for r in totals) <= BROADCAST_MAX_CONVS:
+        offsets = F.broadcast(offsets)
+    out = (
         turns.join(offsets, "conv_id")
         .withColumn(
             "docint",
@@ -124,3 +157,14 @@ def with_docint(turns: DataFrame) -> DataFrame:
         )
         .drop("_off", "_tix")
     )
+    out._docint_convs = local
+    return out
+
+
+def release_docint(df: DataFrame) -> None:
+    """Unpersist the conv relation :func:`with_docint` persisted for
+    ``df`` (a no-op for any other frame). Call it once ``df``'s docints
+    are written or cached; a later re-read would replay the lineage."""
+    convs = getattr(df, "_docint_convs", None)
+    if convs is not None:
+        convs.unpersist()

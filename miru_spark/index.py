@@ -26,67 +26,24 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from miru_spark.docids import release_docint
 from miru_spark.indexing.build import (
     base_with_docint,
     corpus_stats,
     doc_stats,
     postings_flat,
-    postings_flat_pandas,
     term_stats,
+    write_segment,
 )
 
 
-def _bucketed_for_write(postings: DataFrame, n_buckets: int) -> DataFrame:
-    """Bucket postings by term hash and shape the write shuffle.
-
-    Repartitioning by ``bucket`` alone caps the segment write at
-    ``n_buckets`` tasks (and 32 keys hashed into 32 partitions leave
-    ~1/3 empty by collision) — a parallelism ceiling that becomes THE
-    build bottleneck at 10^12 turns. Salting the exchange with the
-    docint span (``docint >> 20``, same granularity as the block
-    builder's heavy-term salt) fans each bucket out across
-    one-million-doc ranges: a 10^9-doc corpus writes ~1000 tasks per
-    bucket, while any corpus under 2^20 docs has a single span and
-    keeps today's exact layout. Files stay (term, docint)-sorted within
-    themselves, so row-group min/max pruning on ``term`` is unchanged;
-    readers never assumed one file per bucket (parquet dirs merge).
-
-    The ``bucket`` SORT PREFIX is load-bearing, not stylistic: the
-    dynamic-partition writer requires ordering by the partition column,
-    and a sort that does NOT lead with it gets a writer-inserted bucket
-    sort appended — whereupon Catalyst's ``EliminateSorts`` removes the
-    explicit (term, docint) sort as redundant and the files land
-    UNSORTED (this silently happened in round 2; round-4 A/B + file
-    audit in BENCH/BASELINE.md). Unsorted files void the term
-    row-group pruning the whole serving path relies on;
-    ``tests/test_edge_cases.py::test_persisted_postings_files_sorted``
-    guards the layout.
-
-    The exchange's partition COUNT is floored at ``4 * n_buckets``:
-    when the distinct-key count (buckets × spans) is near the partition
-    count, hashing goes multinomial — measured on this harness,
-    ``hash(bucket, span=0)`` packed 9 of 32 keys into one of 8
-    partitions and the straggler cost 1.7× build wall time. With ≥4
-    partitions per key, each task holds ≤2-3 keys and dynamic task
-    scheduling levels the cores; non-empty partitions ≈ distinct keys,
-    so the small-corpus file layout (one file per bucket) is unchanged.
-    At production shuffle.partitions (≫128) the floor is a no-op.
-    """
-    from pyspark.sql import functions as F
-
-    from miru_spark.indexing.blocks import SPAN_BITS
-
-    spark = postings.sparkSession
-    n_part = max(int(spark.conf.get("spark.sql.shuffle.partitions")), 4 * n_buckets)
-    return (
-        postings.withColumn(
-            "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
+def _write_meta(path: str, n_docs: int, avg_doclen: float, fmt: str, analyzer: str) -> None:
+    os.makedirs(path, exist_ok=True)
+    with open(os.path.join(path, "meta.json"), "w") as f:
+        json.dump(
+            {"n_docs": n_docs, "avg_doclen": avg_doclen, "format": fmt, "analyzer": analyzer},
+            f,
         )
-        .withColumn("_span", F.shiftright(F.col("docint"), SPAN_BITS))
-        .repartition(n_part, "bucket", "_span")
-        .drop("_span")
-        .sortWithinPartitions("bucket", "term", "docint")
-    )
 
 
 @dataclass
@@ -124,30 +81,18 @@ class InvertedIndex:
 
         Caches only the docs table (small: one row per turn, tokens
         included). The postings relation is left lazy — recomputing the
-        explode+groupBy from cached docs is ~10x cheaper than caching
+        run-length postings from cached docs is ~10x cheaper than caching
         13M+ posting rows through Spark's row-based block store; at real
         scale postings are persisted columnar via :meth:`save` instead.
-
-        With ``positions`` the Arrow-batched pandas tokenizer emits
-        finished posting rows (same rule as :meth:`build_persisted`):
-        the in-UDF per-doc position accumulation beats
-        collect_list+sort_array on exploded tokens by ~6x.
         """
         base = base_with_docint(turns)
         if cache:
             base = base.cache()
         doc_tbl = doc_stats(base, analyzer=analyzer)
-        post = (
-            postings_flat_pandas(base, positions=True, analyzer=analyzer)
-            if positions
-            else postings_flat(base, positions=False, analyzer=analyzer)
-        )
+        post = postings_flat(base, positions=positions, analyzer=analyzer)
         n, avgdl = corpus_stats(doc_tbl)
         terms = term_stats(post)
-        return cls(
-            post, doc_tbl, terms, n, avgdl,
-            _docs_cached=base if cache else None, analyzer=analyzer,
-        )
+        return cls(post, doc_tbl, terms, n, avgdl, _docs_cached=base, analyzer=analyzer)
 
     def save(
         self, path: str, n_buckets: int = 32, table_format: str = "auto"
@@ -164,34 +109,11 @@ class InvertedIndex:
         catalog are configured, else parquet), or an explicit format —
         see :mod:`miru_spark.io`.
         """
-        from pyspark.sql import functions as F
+        from miru_spark.io import resolve_format
 
-        from miru_spark.io import read_table, resolve_format, write_table
-
-        spark = self.postings.sparkSession
-        fmt = resolve_format(spark, table_format)
-        write_table(
-            _bucketed_for_write(self.postings, n_buckets),
-            f"{path}/postings",
-            partition_by=["bucket"],
-            fmt=fmt,
-        )
-        write_table(self.docs, f"{path}/docs", fmt=fmt)
-        # derive term stats from the segments just written: a columnar
-        # (term, docint, tf) read beats re-running tokenize+explode
-        written = read_table(spark, f"{path}/postings", fmt=fmt).select(
-            "term", "docint", "tf"
-        )
-        write_table(term_stats(written), f"{path}/terms", fmt=fmt)
-        meta = {
-            "n_docs": self.n_docs,
-            "avg_doclen": self.avg_doclen,
-            "format": fmt,
-            "analyzer": self.analyzer,
-        }
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump(meta, f)
+        fmt = resolve_format(self.postings.sparkSession, table_format)
+        write_segment(self.postings, self.docs, path, n_buckets=n_buckets, fmt=fmt)
+        _write_meta(path, self.n_docs, self.avg_doclen, fmt, self.analyzer)
 
     @classmethod
     def build_persisted(
@@ -200,89 +122,51 @@ class InvertedIndex:
         path: str,
         positions: bool = False,
         n_buckets: int = 32,
-        tokenizer: str = "auto",
         blocks: bool = False,
         table_format: str = "auto",
         analyzer: str = "standard",
     ) -> "InvertedIndex":
         """The production build job: transcripts → persisted segments.
 
-        Tokenization runs exactly ONCE (inside the postings job); the
-        doc row-store derives ``doclen = sum(tf)`` from the written
-        segments instead of re-tokenizing, and term stats aggregate the
-        same columnar read. Three jobs total::
+        Tokenization runs exactly ONCE, inside the postings write; the
+        doc row-store derives ``doclen = Σtf`` and the term stats from
+        the written segment instead of re-tokenizing
+        (:func:`~miru_spark.indexing.build.write_segment`), and the meta
+        figures come from one aggregate over what was written
+        (:func:`~miru_spark.indexing.build.segment_stats`)::
 
-            1. postings:  tokenize → posexplode → groupBy(term,docint)
-                          → bucket-partition by hash(term) → sorted write
-            2. docs:      base ⨝ (postings ⟶ groupBy(docint).sum(tf))
-            3. terms:     postings ⟶ groupBy(term) stats
+            docint:    conv-level range prefix sum (docids.py)
+            postings:  tokenize → run-length (term, docint) rows
+                       → bucket-partition by hash(term) → sorted write
+            docs:      base ⨝ (postings ⟶ groupBy(docint).sum(tf))
+            terms:     postings ⟶ groupBy(term) stats
+            stats:     one aggregate over docs ∪ postings
+
+        Each write is a Spark action, and adaptive execution runs each
+        of its shuffle stages as a job of its own: the perfbench corpus
+        (8,000 turns, ``local[4]``) traced 27 jobs per build.
 
         Reference analog: MiruIndexer.index composes primary work once
         and feeds field index + activity row store from it
         (miru-service/.../stream/MiruIndexer.java:47-126).
         """
-        from pyspark.sql import functions as F
-
-        from miru_spark.io import read_table, resolve_format, write_table
+        from miru_spark.io import resolve_format
 
         spark = turns.sparkSession
         fmt = resolve_format(spark, table_format)
         base = base_with_docint(turns)
-        if tokenizer == "auto":
-            tokenizer = "pandas" if positions else "jvm"
-        flat = (
-            postings_flat_pandas(base, positions=positions, analyzer=analyzer)
-            if tokenizer == "pandas"
-            else postings_flat(base, positions=positions, analyzer=analyzer)
-        )
-        write_table(
-            _bucketed_for_write(flat, n_buckets),
-            f"{path}/postings",
-            partition_by=["bucket"],
-            fmt=fmt,
-        )
-        written = read_table(spark, f"{path}/postings", fmt=fmt).select(
-            "term", "docint", "tf"
-        )
-        doclens = written.groupBy("docint").agg(
-            F.sum("tf").cast("int").alias("doclen")
-        )
-        write_table(
-            base  # all metadata columns flow into the row store
-            .join(doclens, "docint", "left")
-            .withColumn("doclen", F.coalesce(F.col("doclen"), F.lit(0))),
-            f"{path}/docs",
-            fmt=fmt,
-        )
-        write_table(term_stats(written), f"{path}/terms", fmt=fmt)
-        docs = read_table(spark, f"{path}/docs", fmt=fmt)
-        row = docs.agg(
-            F.count(F.lit(1)).alias("n"), F.avg("doclen").alias("avgdl")
-        ).collect()[0]
-        meta = {
-            "n_docs": int(row["n"]),
-            "avg_doclen": float(row["avgdl"] or 0.0),
-            "format": fmt,
-            "analyzer": analyzer,
-        }
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump(meta, f)
-        if blocks:
-            from miru_spark.indexing.blocks import build_blocks
-
-            flat_full = read_table(spark, f"{path}/postings", fmt=fmt).select(
-                "term", "docint", "tf", "doclen"
-            )
-            write_table(
-                build_blocks(flat_full, meta["avg_doclen"]).withColumn(
-                    "bucket",
-                    F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"),
-                ),
-                f"{path}/blocks",
-                partition_by=["bucket"],
+        try:
+            stats = write_segment(
+                postings_flat(base, positions=positions, analyzer=analyzer),
+                base,
+                path,
+                n_buckets=n_buckets,
+                blocks=blocks,
                 fmt=fmt,
             )
+        finally:
+            release_docint(base)
+        _write_meta(path, stats.n_docs, stats.avg_doclen, fmt, analyzer)
         return cls.load(spark, path)
 
     @classmethod
@@ -335,5 +219,6 @@ class InvertedIndex:
                 continue
             try:
                 df.unpersist()
+                release_docint(df)
             except Exception:
                 pass

@@ -45,11 +45,17 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from miru_spark.docids import release_docint, with_docint
 from miru_spark.index import InvertedIndex
-from miru_spark.indexing.build import postings_flat, term_stats
+from miru_spark.indexing.build import (
+    SegmentStats,
+    postings_flat,
+    segment_stats,
+    write_segment,
+)
 
 SHARD_BITS = 40
 
@@ -153,23 +159,25 @@ class SegmentStore:
         # (shard, delta) commit twice — a concurrent reader's
         # recover() finishes a rename-committed unit whose writer then
         # also appends its own entry. Both entries are recomputed from
-        # the unit's contents, so keep the first and drop replays
-        # (without this, the duplicate would double-count
-        # n_docs/sum_doclen in the per-shard folds on load). Merge
-        # markers ({**st, "merged_from": ...}) legitimately reuse
-        # their shard's current delta index and are keyed separately.
-        seen: set = set()
-        out = []
+        # the unit's contents; the LAST one wins (a later replay is the
+        # corrected record, the usual log convention), kept at the
+        # first one's place so the per-shard folds on load see each
+        # commit once and in commit order. Merge markers
+        # ({**st, "merged_from": ...}) legitimately reuse their shard's
+        # current delta index and are keyed separately.
+        at: dict = {}
+        out: list[dict] = []
         for e in entries:
             key = (
                 e["shard"],
                 e["delta"],
                 tuple(e["merged_from"]) if "merged_from" in e else None,
             )
-            if key in seen:
-                continue
-            seen.add(key)
-            out.append(e)
+            if key in at:
+                out[at[key]] = e
+            else:
+                at[key] = len(out)
+                out.append(e)
         return out
 
     def _append_manifest(self, entry: dict) -> None:
@@ -305,14 +313,14 @@ class SegmentStore:
                 for s in todo[:fail_after]:
                     self._build_unit(
                         with_shard.where(F.col("_shard") == s).drop("_shard"),
-                        shard=s, delta=0, base_local_id=0,
+                        shard=s, delta=0,
                     )
                 raise RuntimeError(f"injected failure after {fail_after} shards")
         if max_concurrent <= 1:
             for s in todo:
                 self._build_unit(
                     with_shard.where(F.col("_shard") == s).drop("_shard"),
-                    shard=s, delta=0, base_local_id=0,
+                    shard=s, delta=0,
                 )
             return
         from concurrent.futures import ThreadPoolExecutor
@@ -320,7 +328,7 @@ class SegmentStore:
         def one(s: int) -> None:
             self._build_unit(
                 with_shard.where(F.col("_shard") == s).drop("_shard"),
-                shard=s, delta=0, base_local_id=0,
+                shard=s, delta=0,
             )
 
         with ThreadPoolExecutor(max_workers=max_concurrent) as pool:
@@ -415,10 +423,7 @@ class SegmentStore:
                 with_shard.where(F.col("_shard") == s).drop("_shard"),
                 shard=s,
                 delta=next_delta,
-                base_local_id=_align_block(st["next_id"]) if st else 0,
-                prev_watermark=(
-                    (st["watermark_conv"], st["watermark_turn"]) if st else None
-                ),
+                st=st,
             )
 
     @_single_writer
@@ -486,10 +491,10 @@ class SegmentStore:
         rows: DataFrame,
         shard: int,
         delta: int,
-        base_local_id: int,
-        prev_watermark: tuple | None = None,
+        st: dict | None = None,
     ) -> None:
-        """Index ``rows`` as the shard's ``delta_{delta}`` unit.
+        """Index ``rows`` as the shard's ``delta_{delta}`` unit, after
+        the shard's latest manifest state ``st`` (None for a new shard).
 
         Crash-atomic like the merge paths: every file is written under
         the shard's ``_delta_tmp`` and the unit is COMMITTED by a single
@@ -497,11 +502,11 @@ class SegmentStore:
         served; swept by :meth:`recover`), and a crash between the
         rename and the manifest append is finished by
         :meth:`_finish_delta_commit` (invoked from ``recover`` or on
-        re-entry here), which recomputes every manifest field from the
-        committed unit itself. Without this, a torn append would leave
-        a partial (unloadable) unit — or, once retried, the same rows
-        indexed twice under the SAME docint range, since the retry's
-        watermark predates the orphan.
+        re-entry here), which recomputes the manifest entry from the
+        committed unit with the same :meth:`_delta_entry`. Without this,
+        a torn append would leave a partial (unloadable) unit — or, once
+        retried, the same rows indexed twice under the SAME docint
+        range, since the retry's watermark predates the orphan.
         """
         import shutil
 
@@ -523,102 +528,87 @@ class SegmentStore:
         tmp = os.path.join(os.path.dirname(out), "_delta_tmp")
         shutil.rmtree(tmp, ignore_errors=True)
         # local dense id in (conv_id, turn_idx) order, continuing after
-        # base_local_id — the shard's writer cursor. with_docint's
+        # the shard's writer cursor (block-aligned). with_docint's
         # conv-offset decomposition avoids a single-partition global
         # window even within the shard.
-        from miru_spark.docids import with_docint
-
-        base = with_docint(rows).withColumn(
+        base_local_id = _align_block(st["next_id"]) if st else 0
+        ranked = with_docint(rows)
+        base = ranked.withColumn(
             "docint",
             (
                 F.lit(shard << SHARD_BITS) + F.lit(base_local_id) + F.col("docint")
             ).cast("long"),
         )
-        flat = postings_flat(base, positions=self.positions)
-        flat.write.mode("overwrite").parquet(f"{tmp}/postings")
-        written = self.spark.read.parquet(f"{tmp}/postings")
-        (
-            base  # all metadata columns flow into the row store
-            .join(
-                written.groupBy("docint").agg(
-                    F.sum("tf").cast("int").alias("doclen")
-                ),
-                "docint",
-                "left",
+        try:
+            stats = write_segment(
+                postings_flat(base, positions=self.positions),
+                base,
+                tmp,
+                blocks=self.blocks,
             )
-            .withColumn("doclen", F.coalesce(F.col("doclen"), F.lit(0)))
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/docs")
-        )
-        term_stats(written.select("term", "docint", "tf")).write.mode(
-            "overwrite"
-        ).parquet(f"{tmp}/terms")
-        if self.blocks:
-            self._write_blocks(tmp)
-        docs = self.spark.read.parquet(f"{tmp}/docs")
-        row = docs.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("doclen").alias("sdl"),
-            F.max("conv_id").alias("wc"),
-        ).collect()[0]
-        n_turns = int(row["n"])
-        wc = row["wc"]
-        wt = (
-            docs.where(F.col("conv_id") == wc).agg(F.max("turn_idx")).collect()[0][0]
-            if wc is not None
-            else None
-        )
-        # watermarks are monotonic per shard: a repair unit re-indexes
-        # keys BELOW the shard's cursor, and letting its (lower) max key
-        # become the watermark would re-admit already-indexed rows on
-        # the next append — carry the previous watermark forward if it
-        # is higher.
-        if prev_watermark is not None and prev_watermark[0] is not None:
-            pwc, pwt = prev_watermark
-            cur = (wc, int(wt)) if wc is not None else None
-            if cur is None or (pwc, int(pwt or 0)) > cur:
-                wc, wt = pwc, pwt
-        n_post = written.count()
-        files = sorted(
-            fn for fn in os.listdir(tmp) if not fn.startswith(".")
-        )
+        finally:
+            release_docint(ranked)
+        entry = self._delta_entry(shard, delta, tmp, stats, st, base_local_id)
+        entry["build_ms"] = int((time.time() - t0) * 1000)
         os.rename(tmp, out)  # commit point
-        self._append_manifest(
-            {
-                "shard": shard,
-                "delta": delta,
-                "watermark_conv": wc,
-                "watermark_turn": int(wt) if wt is not None else None,
-                "next_id": base_local_id + n_turns,
-                "n_turns": n_turns,
-                "n_postings": int(n_post),
-                "sum_doclen": int(row["sdl"] or 0),
-                "build_ms": int((time.time() - t0) * 1000),
-                "files": files,
-            }
-        )
+        self._append_manifest(entry)
 
-    def _write_blocks(self, unit_dir: str) -> None:
-        """Compressed block segments for one unit. Units start at
-        block-aligned docints (_align_block), so (term, block_id) never
-        spans units and the union of unit blocks is a valid block index.
-        Block metadata uses the unit's doclen profile; pruning bounds
-        stay valid under later corpus growth via (max_tf, min_dl) —
-        see blocks.py / blockmax._block_ub_tfc."""
-        from miru_spark.indexing.blocks import build_blocks
+    @staticmethod
+    def _delta_entry(
+        shard: int,
+        delta: int,
+        unit_dir: str,
+        stats: SegmentStats,
+        st: dict | None,
+        next_id: int,
+    ) -> dict:
+        """Manifest entry of a delta unit from its :func:`segment_stats`
+        — the one computation behind both the writer's entry and a
+        recovered one. ``next_id`` (the cursor to record when the unit
+        is empty) otherwise falls out of the max docint's local bits:
+        units assign dense local ids, so ``max_local + 1`` IS the writer
+        cursor. Watermarks are monotonic per shard: a repair unit
+        re-indexes keys BELOW the shard's cursor, and letting its
+        (lower) max key become the watermark would re-admit
+        already-indexed rows on the next append — the previous
+        watermark carries forward if it is higher."""
+        key = stats.max_key
+        if st is not None and st["watermark_conv"] is not None:
+            prev = (st["watermark_conv"], int(st["watermark_turn"] or 0))
+            if key is None or prev > key:
+                key = prev
+        if stats.max_docint is not None:
+            next_id = (stats.max_docint & ((1 << SHARD_BITS) - 1)) + 1
+        return {
+            "shard": shard,
+            "delta": delta,
+            "watermark_conv": key[0] if key else None,
+            "watermark_turn": key[1] if key else None,
+            "next_id": int(next_id),
+            "n_turns": stats.n_docs,
+            "n_postings": stats.n_postings,
+            "sum_doclen": stats.sum_doclen,
+            "files": sorted(fn for fn in os.listdir(unit_dir) if not fn.startswith(".")),
+        }
 
-        flat = self.spark.read.parquet(f"{unit_dir}/postings").select(
-            "term", "docint", "tf", "doclen"
+    def _write_union(
+        self, paths: list[str], out: str, drop: DataFrame | None = None
+    ) -> SegmentStats:
+        """Rewrite the union of unit dirs ``paths`` — minus the docints
+        in ``drop`` — as one segment at ``out`` (merge and expunge).
+        Units start at block-aligned docints (_align_block), so a
+        (term, block_id) group never spans units and the union's blocks
+        are rebuilt whole. mergeSchema: units written after an ADDITIVE
+        schema evolution carry extra docs columns."""
+        post = self.spark.read.parquet(*[f"{p}/postings" for p in paths])
+        docs = self.spark.read.option("mergeSchema", "true").parquet(
+            *[f"{p}/docs" for p in paths]
         )
-        row = (
-            self.spark.read.parquet(f"{unit_dir}/docs")
-            .agg(F.avg("doclen"))
-            .collect()[0]
-        )
-        avgdl = float(row[0] or 1.0)
-        build_blocks(flat, avgdl).write.mode("overwrite").parquet(
-            f"{unit_dir}/blocks"
-        )
+        if drop is not None:
+            post = post.join(drop, "docint", "left_anti")
+            docs = docs.join(drop, "docint", "left_anti")
+        post = post.repartition(max(1, post.rdd.getNumPartitions() // len(paths)))
+        return write_segment(post, docs, out, blocks=self.blocks)
 
     # -- merge (compaction) ------------------------------------------------
 
@@ -635,8 +625,6 @@ class SegmentStore:
         leaves a loadable store; re-running the merge finishes cleanup.
         Future appends continue from the same watermark (the manifest's
         delta index is unchanged by a merge)."""
-        import shutil
-
         state = self.shard_state()
         st = state.get(shard)
         if st is None:
@@ -680,23 +668,7 @@ class SegmentStore:
         paths = [os.path.join(sdir, n) for n in units]
         merged_tmp = os.path.join(sdir, "_merged_tmp")
         shutil.rmtree(merged_tmp, ignore_errors=True)
-        post = self.spark.read.parquet(*[f"{p}/postings" for p in paths])
-        (
-            post.repartition(max(1, post.rdd.getNumPartitions() // len(paths)))
-            .sortWithinPartitions("term", "docint")
-            .write.mode("overwrite")
-            .parquet(f"{merged_tmp}/postings")
-        )
-        self.spark.read.option("mergeSchema", "true").parquet(
-            *[f"{p}/docs" for p in paths]
-        ).write.mode("overwrite").parquet(f"{merged_tmp}/docs")
-        term_stats(
-            self.spark.read.parquet(f"{merged_tmp}/postings").select(
-                "term", "docint", "tf"
-            )
-        ).write.mode("overwrite").parquet(f"{merged_tmp}/terms")
-        if self.blocks:
-            self._write_blocks(merged_tmp)
+        self._write_union(paths, merged_tmp)
         os.rename(merged_tmp, os.path.join(sdir, merged_name))  # commit point
         self._append_manifest({**st, "merged_from": units, "files": ["merged"]})
         if not retain_sources:
@@ -763,6 +735,12 @@ class SegmentStore:
         oldest surviving source become unreconstructable only HERE,
         never at merge time (when ``retain_sources=True`` was used).
         Also the shared sweeper for crashed-merge leftovers."""
+        return self._sweep_shard(shard)
+
+    def _sweep_shard(self, shard: int) -> int:
+        """:meth:`vacuum_shard` without the writer lock — also run by
+        the read-only ``load`` → ``recover`` path when it finishes a
+        crashed expunge."""
         import shutil
 
         sdir = os.path.join(self.path, f"shard={shard}")
@@ -917,47 +895,24 @@ class SegmentStore:
         paths = [os.path.join(sdir, n) for n in units]
         tmp = os.path.join(sdir, "_expunge_tmp")
         shutil.rmtree(tmp, ignore_errors=True)
-        drop = drop.select("docint")
-        post = self.spark.read.parquet(
-            *[f"{p}/postings" for p in paths]
-        ).join(drop, "docint", "left_anti")
-        (
-            post.repartition(
-                max(1, post.rdd.getNumPartitions() // max(1, len(paths)))
-            )
-            .sortWithinPartitions("term", "docint")
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/postings")
-        )
-        self.spark.read.parquet(*[f"{p}/docs" for p in paths]).join(
-            drop, "docint", "left_anti"
-        ).write.mode("overwrite").parquet(f"{tmp}/docs")
-        term_stats(
-            self.spark.read.parquet(f"{tmp}/postings").select(
-                "term", "docint", "tf"
-            )
-        ).write.mode("overwrite").parquet(f"{tmp}/terms")
-        if self.blocks:
-            self._write_blocks(tmp)
+        stats = self._write_union(paths, tmp, drop=drop.select("docint"))
         os.rename(tmp, merged_final)  # commit point
-        self._finish_expunge_commit(shard, st, new_delta)
+        self._finish_expunge_commit(shard, st, new_delta, stats)
 
-    def _finish_expunge_commit(self, shard: int, st: dict, new_delta: int) -> None:
+    def _finish_expunge_commit(
+        self, shard: int, st: dict, new_delta: int, stats: SegmentStats | None = None
+    ) -> None:
         """Write the manifest reset entry for a committed (renamed)
         expunge unit and delete everything it supersedes. Idempotent and
-        callable WITHOUT the original drop set — all totals are
-        recomputed from the merged unit itself, which is why
-        :meth:`recover` can finish a crashed expunge whose drop set is
-        no longer reconstructable."""
-        import shutil
-
-        sdir = os.path.join(self.path, f"shard={shard}")
-        merged_final = os.path.join(sdir, f"merged_{new_delta:04d}")
-        docs = self.spark.read.parquet(f"{merged_final}/docs")
-        row = docs.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("sdl")
-        ).collect()[0]
-        n_post = self.spark.read.parquet(f"{merged_final}/postings").count()
+        callable WITHOUT the original drop set — all totals are the
+        merged unit's own :func:`segment_stats` (``stats``, when the
+        writer has just read them), which is why :meth:`recover` can
+        finish a crashed expunge whose drop set is no longer
+        reconstructable."""
+        merged_final = os.path.join(
+            self.path, f"shard={shard}", f"merged_{new_delta:04d}"
+        )
+        stats = stats or segment_stats(self.spark, merged_final)
         self._append_manifest(
             {
                 "shard": shard,
@@ -965,77 +920,31 @@ class SegmentStore:
                 "watermark_conv": st["watermark_conv"],
                 "watermark_turn": st["watermark_turn"],
                 "next_id": st["next_id"],
-                "n_turns": int(row["n"]),
-                "n_postings": int(n_post),
-                "sum_doclen": int(row["sdl"] or 0),
+                "n_turns": stats.n_docs,
+                "n_postings": stats.n_postings,
+                "sum_doclen": stats.sum_doclen,
                 "expunged": True,
                 "files": ["merged"],
             }
         )
-        live = set(self._live_shard_units(shard))
-        for n in os.listdir(sdir):
-            stale = (
-                n.startswith(("delta_", "merged_")) and n not in live
-            ) or n in ("_expunge_tmp", "_merged_tmp", "_delta_tmp")
-            if stale:
-                shutil.rmtree(os.path.join(sdir, n), ignore_errors=True)
+        self._sweep_shard(shard)
 
     def _finish_delta_commit(
         self, shard: int, st: dict | None, delta: int
     ) -> None:
         """Manifest a rename-committed ``delta_{delta}`` unit whose
-        manifest append was lost to a crash. Every field is recomputed
-        from the unit itself, so recovery needs nothing from the crashed
-        process: ``next_id`` falls out of the max docint's local bits
-        (units assign dense local ids, so ``max_local + 1`` IS the
-        writer cursor ``_build_unit`` would have recorded), and the
-        watermark applies the same carry-forward-if-higher rule as
-        ``_build_unit`` (a repair unit's lower max key must not regress
-        the shard's cursor). The entry is tagged ``recovered`` for
+        manifest append was lost to a crash. The entry is recomputed
+        from the unit itself by :meth:`_delta_entry`, the computation
+        ``_build_unit`` records, so recovery needs nothing from the
+        crashed process. The entry is tagged ``recovered`` for
         lineage."""
         out = self._unit_dir(shard, delta)
-        docs = self.spark.read.parquet(f"{out}/docs")
-        row = docs.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("doclen").alias("sdl"),
-            F.max("conv_id").alias("wc"),
-            F.max("docint").alias("mx"),
-        ).collect()[0]
-        wc = row["wc"]
-        wt = (
-            docs.where(F.col("conv_id") == wc)
-            .agg(F.max("turn_idx"))
-            .collect()[0][0]
-            if wc is not None
-            else None
+        entry = self._delta_entry(
+            shard, delta, out, segment_stats(self.spark, out), st,
+            st["next_id"] if st else 0,
         )
-        if st is not None and st["watermark_conv"] is not None:
-            cur = (wc, int(wt)) if wc is not None else None
-            prev = (st["watermark_conv"], int(st["watermark_turn"] or 0))
-            if cur is None or prev > cur:
-                wc, wt = prev
-        next_id = (
-            (int(row["mx"]) & ((1 << SHARD_BITS) - 1)) + 1
-            if row["mx"] is not None
-            else (st["next_id"] if st else 0)
-        )
-        n_post = self.spark.read.parquet(f"{out}/postings").count()
-        self._append_manifest(
-            {
-                "shard": shard,
-                "delta": delta,
-                "watermark_conv": wc,
-                "watermark_turn": int(wt) if wt is not None else None,
-                "next_id": int(next_id),
-                "n_turns": int(row["n"]),
-                "n_postings": int(n_post),
-                "sum_doclen": int(row["sdl"] or 0),
-                "recovered": True,
-                "files": sorted(
-                    fn for fn in os.listdir(out) if not fn.startswith(".")
-                ),
-            }
-        )
+        entry["recovered"] = True
+        self._append_manifest(entry)
 
     def _max_disk_unit(self, shard: int) -> int:
         """Highest unit index present on disk for a shard (-1 if none) —

@@ -63,6 +63,18 @@ from miru_spark.query.bm25 import (
 from miru_spark.query.parser import parse_query
 
 
+def _local_df(spark, rows: list, schema: str) -> DataFrame:
+    """A small driver-side relation, converted through Arrow in the JVM.
+    ``spark.createDataFrame`` of a plain list re-pickles the rows in
+    Python workers each time the plan runs, so a batch tick on a session
+    with no warm workers paid their start-up."""
+    import pandas as pd
+    from pyspark.sql.types import _parse_datatype_string
+
+    st = _parse_datatype_string(schema)
+    return spark.createDataFrame(pd.DataFrame(rows, columns=st.names), st)
+
+
 def _mask_docs_pairs(
     index, mask_specs: dict, or_specs: dict
 ) -> DataFrame | None:
@@ -320,7 +332,8 @@ def search_batch(
     # fused and phrase blocks — masked/tombstoned/ranked together below
     pre_rank: list[DataFrame] = []
     if fused_rows:
-        leaves_df = spark.createDataFrame(
+        leaves_df = _local_df(
+            spark,
             fused_rows,
             "qid string, leaf_id int, kind string, value string, "
             "boost double, mode string, required int, k int, "
@@ -419,7 +432,8 @@ def search_batch(
         pre_rank.append(scored.select("qid", "docint", "score", "_k"))
 
     if phrase_rows:
-        pl = spark.createDataFrame(
+        pl = _local_df(
+            spark,
             phrase_rows,
             "qid string, off int, term string, boost double, k int, "
             "n_leaves int, slop int",
@@ -538,7 +552,8 @@ def search_batch(
             for p in pre_rank[1:]:
                 all_scored = all_scored.unionByName(p)
         else:  # pure-metadata OR queries only
-            all_scored = spark.createDataFrame(
+            all_scored = _local_df(
+                spark,
                 [], "qid string, docint long, score double, _k int"
             )
         mask_pairs = _mask_docs_pairs(index, mask_specs, or_specs)

@@ -54,6 +54,13 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    if master.startswith("local"):
+        # Python workers are fresh interpreters started from the JVM's
+        # cwd: put the engine's parent directory on their path so a
+        # pandas UDF unpickles miru_spark from any working directory
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        path = os.pathsep.join(p for p in (root, os.environ.get("PYTHONPATH")) if p)
+        builder = builder.config("spark.executorEnv.PYTHONPATH", path)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

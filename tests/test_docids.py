@@ -72,3 +72,30 @@ def test_prefix_sum_matches_global_window(spark, tiny_turns):
         for r in with_docint(rep).collect()
     }
     assert a == c
+
+
+def test_duplicate_keys_fail_loudly(spark, tmp_path):
+    """Duplicate (conv_id, turn_idx) keys would alias one docint: every
+    write path rejects them instead of indexing two docs as one."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from miru_spark.index import InvertedIndex
+    from miru_spark.indexing.incremental import SegmentStore
+
+    df = spark.createDataFrame(
+        [
+            ("c0", 0, "user", "alpha", None),
+            ("c1", 0, "user", "beta", None),
+            ("c1", 0, "user", "gamma", None),
+            ("c1", 1, "user", "delta", None),
+        ],
+        "conv_id string, turn_idx int, role string, text string, tool string",
+    ).withColumn("ts", F.current_timestamp())
+    with pytest.raises(Exception, match=r"duplicate \(conv_id, turn_idx\) key in conv_id c1"):
+        InvertedIndex.build_persisted(df, str(tmp_path / "idx"))
+    store = SegmentStore(spark, str(tmp_path / "store"), n_shards=2)
+    store.build(df.where(F.col("conv_id") == "c0"))
+    with pytest.raises(Exception, match=r"duplicate \(conv_id, turn_idx\) key in conv_id c1"):
+        store.append(df.where(F.col("conv_id") == "c1"))
+    assert store.load().n_docs == 1

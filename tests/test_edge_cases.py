@@ -71,16 +71,38 @@ def test_persisted_postings_files_sorted(spark, tiny_turns, tmp_path):
     on. Round 2 silently lost it to EliminateSorts (the writer's
     required-ordering sort made the explicit sort redundant); the
     bucket sort prefix in _bucketed_for_write is what keeps it (see
-    BENCH/BASELINE.md round-4 attribution)."""
+    BENCH/BASELINE.md round-4 attribution). Checked for every segment
+    kind: the bucketed build, and a store's build unit, append delta,
+    tiered merge and expunge."""
     import glob
 
     import pyarrow.parquet as pq
 
+    from miru_spark.indexing.incremental import SegmentStore
+
+    def assert_sorted(pattern):
+        files = glob.glob(pattern)
+        assert files, pattern
+        for f in files:
+            t = pq.read_table(f, columns=["term", "docint"])
+            pairs = list(
+                zip(t.column("term").to_pylist(), t.column("docint").to_pylist())
+            )
+            assert pairs == sorted(pairs), f"unsorted postings file: {f}"
+
     d = str(tmp_path / "seg")
     InvertedIndex.build_persisted(tiny_turns, d, positions=False)
-    files = glob.glob(f"{d}/postings/bucket=*/*.parquet")
-    assert files
-    for f in files:
-        t = pq.read_table(f, columns=["term", "docint"])
-        pairs = list(zip(t.column("term").to_pylist(), t.column("docint").to_pylist()))
-        assert pairs == sorted(pairs), f"unsorted postings file: {f}"
+    assert_sorted(f"{d}/postings/bucket=*/*.parquet")
+
+    convs = sorted(r[0] for r in tiny_turns.select("conv_id").distinct().collect())
+    cut = convs[len(convs) // 2]
+    s = str(tmp_path / "store")
+    store = SegmentStore(spark, s, n_shards=2)
+    store.build(tiny_turns.where(F.col("conv_id") < cut))
+    assert_sorted(f"{s}/shard=*/delta_0000/postings/*.parquet")
+    store.append(tiny_turns.where(F.col("conv_id") >= cut))
+    assert_sorted(f"{s}/shard=*/delta_0001/postings/*.parquet")
+    assert store.compact(merge_factor=2) == 2
+    assert_sorted(f"{s}/shard=*/merged_0000_0001/postings/*.parquet")
+    store.expunge(store.load().docs.where(F.col("turn_idx") == 0).select("docint"))
+    assert_sorted(f"{s}/shard=*/merged_0002/postings/*.parquet")

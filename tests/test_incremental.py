@@ -367,7 +367,10 @@ def test_manifest_duplicate_commit_entries_fold_once(
 ):
     """The reader-finishes-commit race can append the same (shard,
     delta) entry twice; manifest() folding must dedupe so per-shard
-    n_docs/sum_doclen are not double-counted on load."""
+    n_docs/sum_doclen are not double-counted on load, and the LAST of
+    the duplicates wins (a corrected replay replaces the first)."""
+    import json
+
     store = _store(spark, tmp_path / "dup")
     store.build(tiny_turns)
     n = store.load().n_docs
@@ -382,3 +385,39 @@ def test_manifest_duplicate_commit_entries_fold_once(
         .load()
         .avg_doclen
     )
+    sdl = sum(e["sum_doclen"] for e in store.manifest())
+    corrected = json.loads(first)
+    corrected["sum_doclen"] += 1000
+    with open(man, "a") as f:
+        f.write(json.dumps(corrected) + "\n")  # corrected replay
+    assert len(store.manifest()) == N_SHARDS
+    assert store.manifest()[0] == corrected
+    idx = store.load()
+    assert idx.n_docs == n
+    assert idx.avg_doclen == pytest.approx((sdl + 1000) / n)
+
+
+def test_write_paths_release_persisted_relations(spark, tiny_turns, tmp_path):
+    """A long-lived session must not accumulate cached relations: the
+    docint assignment's persisted conv relation is released once each
+    segment is written (build_persisted, store build, append; merge and
+    expunge persist nothing). Compared by RDD id: the JVM drops
+    persisted RDDs it garbage-collects, so an unrelated earlier entry
+    may vanish meanwhile."""
+    from pyspark.sql import functions as F
+
+    from miru_spark.index import InvertedIndex
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    start = persisted()
+    InvertedIndex.build_persisted(tiny_turns, str(tmp_path / "idx"))
+    convs = sorted(r[0] for r in tiny_turns.select("conv_id").distinct().collect())
+    cut = convs[len(convs) // 2]
+    store = _store(spark, tmp_path / "store")
+    store.build(tiny_turns.where(F.col("conv_id") < cut))
+    store.append(tiny_turns.where(F.col("conv_id") >= cut))
+    assert store.compact(merge_factor=2) > 0
+    store.expunge(store.load().docs.where(F.col("turn_idx") == 0).select("docint"))
+    assert persisted() <= start
