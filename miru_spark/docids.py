@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from miru_spark.session import local_df
+
 #: conv relations up to this many conversations (~90 B a row at a dozen
 #: turns: well under the session's 64 MiB broadcast threshold) are
 #: broadcast explicitly — see with_docint
@@ -53,7 +55,9 @@ JOIN (
 """
 
 
-def with_docint(turns: DataFrame) -> DataFrame:
+def with_docint(
+    turns: DataFrame, by: str | None = None, start: dict | None = None
+) -> DataFrame:
     """Add a dense ``docint`` column = rank of (conv_id, turn_idx).
 
     Deterministic and parallelism-independent, with NO unpartitioned
@@ -71,13 +75,22 @@ def with_docint(turns: DataFrame) -> DataFrame:
     relation rides on the result; :func:`release_docint` frees it once
     the result has been written or cached.
 
+    ``by`` names a column that is constant per conversation (a store's
+    shard): the ranks then restart at each of its values, and a value
+    ``v``'s docints are dense from ``start[v]`` (0 when absent) — one
+    pass gives every shard the ids a separate call per shard would.
+    The result's ``_docint_rows`` maps each ``by`` value (None without
+    ``by``) to its row count, read from the same totals collect.
+
     Duplicate ``(conv_id, turn_idx)`` keys fail the call (the conv-level
     aggregate raises while the totals are collected — no extra job):
     they would otherwise alias one docint.
     """
     spark = turns.sparkSession
+    keys = [by] if by else []
+    start = start or {}
     tix = F.sort_array(F.collect_list("turn_idx"))
-    convs = turns.groupBy("conv_id").agg(
+    convs = turns.groupBy(*keys, "conv_id").agg(
         F.when(
             F.size(tix) != F.size(F.array_distinct(tix)),
             F.raise_error(
@@ -93,35 +106,47 @@ def with_docint(turns: DataFrame) -> DataFrame:
     )
     p = max(spark.sparkContext.defaultParallelism, 2)
     local = (
-        convs.repartitionByRange(p, "conv_id")
+        convs.repartitionByRange(p, *keys, "conv_id")
         .withColumn("_pid", F.spark_partition_id())
         .persist()
     )
     w = (
-        Window.partitionBy("_pid")
+        Window.partitionBy("_pid", *keys)
         .orderBy("conv_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     try:
-        totals = local.groupBy("_pid").agg(
+        totals = local.groupBy("_pid", *keys).agg(
             F.sum("_n").alias("_t"), F.count(F.lit(1)).alias("_c")
         ).collect()
     except Exception:
         local.unpersist()
         raise
-    acc = 0
+    # a key's partitions hold ascending conv_id ranges, so its base in
+    # partition i is its start plus its row totals in partitions < i
+    acc: dict = {}
     bases = []
     for r in sorted(totals, key=lambda r: r["_pid"]):
-        bases.append((int(r["_pid"]), acc))
-        acc += int(r["_t"])
+        k = r[by] if by else None
+        a = acc.get(k, start.get(k, 0))
+        bases.append((int(r["_pid"]), *([k] if by else []), a))
+        acc[k] = a + int(r["_t"])
+    key_schema = f", {by} {turns.schema[by].dataType.simpleString()}" if by else ""
     base_df = F.broadcast(
-        spark.createDataFrame(bases or [(0, 0)], "_pid int, _base long")
+        local_df(
+            spark,
+            bases or [(0, *([0] if by else []), 0)],
+            f"_pid int{key_schema}, _base long",
+        )
     )
     offsets = (
         local.withColumn("_loff", F.coalesce(F.sum("_n").over(w), F.lit(0)))
-        .join(base_df, "_pid")
+        .join(base_df, ["_pid", *keys])
         .select(
-            "conv_id", (F.col("_loff") + F.col("_base")).alias("_off"), "_tix"
+            *keys,
+            "conv_id",
+            (F.col("_loff") + F.col("_base")).alias("_off"),
+            "_tix",
         )
     )
     # Within-conv rank instead of raw turn_idx: identical on contiguous
@@ -146,7 +171,7 @@ def with_docint(turns: DataFrame) -> DataFrame:
     if sum(int(r["_c"]) for r in totals) <= BROADCAST_MAX_CONVS:
         offsets = F.broadcast(offsets)
     out = (
-        turns.join(offsets, "conv_id")
+        turns.join(offsets, [*keys, "conv_id"])
         .withColumn(
             "docint",
             (
@@ -158,6 +183,7 @@ def with_docint(turns: DataFrame) -> DataFrame:
         .drop("_off", "_tix")
     )
     out._docint_convs = local
+    out._docint_rows = {k: n - start.get(k, 0) for k, n in acc.items()}
     return out
 
 

@@ -128,10 +128,11 @@ def encode_group_frame(
 
 def build_blocks(
     flat: DataFrame,
-    avgdl: float,
+    avgdl: float | dict,
     n_partitions: int | None = None,
     block_bits: int = BLOCK_BITS,
     span_bits: int = SPAN_BITS,
+    by: str | None = None,
 ) -> DataFrame:
     """flat postings ``(term, docint, tf, doclen)`` → block rows.
 
@@ -149,10 +150,15 @@ def build_blocks(
     a block range could straddle two partitions) exist so tests and the
     skew harness can exercise the salt at small docint ranges; prod
     callers use the module defaults.
+
+    ``by`` names an int column of ``flat`` that splits it into segments
+    encoded at their own ``avgdl[value]``; it rides through to the
+    output. A block must not span two values (true for a store's shard,
+    whose docint ranges are block-aligned).
     """
     if span_bits <= block_bits:
         raise ValueError("span_bits must exceed block_bits (no split groups)")
-    cols = ["term", "docint", "tf", "doclen"]
+    cols = ["term", "docint", "tf", "doclen", *([by] if by else [])]
     rep = flat.select(*cols).withColumn(
         "_span", F.shiftright(F.col("docint"), span_bits)
     )
@@ -163,7 +169,6 @@ def build_blocks(
     ).sortWithinPartitions("term", "docint").drop("_span")
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        avg = avgdl
         bbits = block_bits
         carry: pd.DataFrame | None = None
         for pdf in batches:
@@ -180,8 +185,20 @@ def build_blocks(
             carry = pdf.iloc[split:]
             body = pdf.iloc[:split]
             if len(body):
-                yield encode_group_frame(body, avg, bbits)
+                yield encode_frame(body)
         if carry is not None and len(carry):
-            yield encode_group_frame(carry, avg, bbits)
+            yield encode_frame(carry)
 
-    return rep.mapInPandas(encode, schema=BLOCKS_SCHEMA)
+    def encode_frame(pdf: pd.DataFrame) -> pd.DataFrame:
+        if by is None:
+            return encode_group_frame(pdf, avgdl, block_bits)
+        return pd.concat(
+            [
+                encode_group_frame(g, avgdl[k], block_bits).assign(**{by: k})
+                for k, g in pdf.groupby(by, sort=True)
+            ],
+            ignore_index=True,
+        )
+
+    schema = BLOCKS_SCHEMA + (f", {by} int" if by else "")
+    return rep.mapInPandas(encode, schema=schema)

@@ -261,16 +261,17 @@ def doc_stats(base: DataFrame, analyzer: str = "standard") -> DataFrame:
     )
 
 
-def term_stats(postings: DataFrame) -> DataFrame:
+def term_stats(postings: DataFrame, by: str | None = None) -> DataFrame:
     """Per-term df/cf — reference's global-cardinality row
-    (``LabFieldIndex.getGlobalCardinality``, docId=-1 row).
+    (``LabFieldIndex.getGlobalCardinality``, docId=-1 row), per ``by``
+    value when given.
 
     ``max_docint`` reproduces the lastId posting-skip
     (``FieldMultiTermTxIndex.considerIfLastIdGreaterThanN``,
     miru-plugin/.../index/FieldMultiTermTxIndex.java:14-35): incremental
     scorers can prune terms with no doc newer than a watermark.
     """
-    return postings.groupBy("term").agg(
+    return postings.groupBy(*([by] if by else []), "term").agg(
         F.count(F.lit(1)).alias("df"),
         F.sum("tf").cast("long").alias("cf"),
         F.max("docint").alias("max_docint"),
@@ -303,27 +304,35 @@ class SegmentStats:
         return self.sum_doclen / self.n_docs if self.n_docs else 0.0
 
 
-def segment_stats(spark: SparkSession, path: str, fmt: str = "parquet") -> SegmentStats:
+def segment_stats(
+    spark: SparkSession, path: str, fmt: str = "parquet", by: str | None = None
+):
     """Read a written segment's corpus stats in ONE aggregate over the
     union of its docs and (column-free) postings scans: doc count,
     Σdoclen, posting count, max ``(conv_id, turn_idx)`` and max docint.
     Writers and crash recovery both take their manifest/meta figures
     from here, so a recovered entry is the one the writer would have
-    recorded."""
+    recorded. With ``by`` (the partition column of a keyed
+    :func:`write_segment`) the aggregate groups by it and the result is
+    ``{value: SegmentStats}``."""
+    keys = [by] if by else []
     docs = read_table(spark, f"{path}/docs", fmt=fmt).select(
+        *keys,
         F.lit(0).alias("_p"),
         "doclen",
         F.struct("conv_id", "turn_idx").alias("_k"),
         "docint",
     )
     post = read_table(spark, f"{path}/postings", fmt=fmt).select(
+        *keys,
         F.lit(1).alias("_p"),
         F.lit(None).cast("int").alias("doclen"),
         F.lit(None).cast(docs.schema["_k"].dataType).alias("_k"),
         F.lit(None).cast("long").alias("docint"),
     )
-    row = (
+    rows = (
         docs.unionByName(post)
+        .groupBy(*keys)
         .agg(
             F.count(F.lit(1)).alias("rows"),
             F.sum("_p").alias("n_post"),
@@ -331,8 +340,16 @@ def segment_stats(spark: SparkSession, path: str, fmt: str = "parquet") -> Segme
             F.max("_k").alias("key"),
             F.max("docint").alias("mx"),
         )
-        .collect()[0]
+        .collect()
     )
+    stats = {r[by] if by else None: _segment_stats_row(r) for r in rows}
+    if by:
+        return stats
+    # a global aggregate returns one row even over empty input
+    return stats[None]
+
+
+def _segment_stats_row(row) -> SegmentStats:
     n_post = int(row["n_post"] or 0)
     key = row["key"]
     return SegmentStats(
@@ -404,7 +421,8 @@ def write_segment(
     n_buckets: int | None = None,
     blocks: bool = False,
     fmt: str = "parquet",
-) -> SegmentStats:
+    by: str | None = None,
+):
     """Write one segment directory — the single write path of every
     build, save, store unit, merge and expunge.
 
@@ -420,41 +438,73 @@ def write_segment(
     - ``blocks/`` when asked (blocks.py), bucketed like the postings.
 
     Returns :func:`segment_stats` of what was written.
+
+    ``by`` writes several segments in one pass: ``postings`` and ``docs``
+    both carry the (int) column ``by``, every table is partitioned by it
+    (``<table>/<by>=<v>/`` holds value ``v``'s segment), term stats and
+    blocks are computed per value, and the result is ``{v:
+    SegmentStats}``. Each value's docs, terms and blocks land in one
+    file; its postings in one sorted file per input partition holding
+    it. Not combinable with ``n_buckets``.
     """
     from miru_spark.indexing.blocks import build_blocks
 
+    if by and n_buckets:
+        raise ValueError("write_segment: by and n_buckets are exclusive")
     spark = postings.sparkSession
-    bucket_by = ["bucket"] if n_buckets else None
-    write_table(
-        _bucketed_for_write(postings, n_buckets)
-        if n_buckets
-        else postings.sortWithinPartitions("term", "docint"),
-        f"{path}/postings",
-        partition_by=bucket_by,
-        fmt=fmt,
-    )
+    keys = [by] if by else []
+    part_by = ["bucket"] if n_buckets else keys or None
+    if n_buckets:
+        post_out = _bucketed_for_write(postings, n_buckets)
+    else:
+        # a keyed sort must LEAD with the partition column (see
+        # _bucketed_for_write: otherwise the files land unsorted)
+        post_out = postings.sortWithinPartitions(*keys, "term", "docint")
+    write_table(post_out, f"{path}/postings", partition_by=part_by, fmt=fmt)
     written = read_table(spark, f"{path}/postings", fmt=fmt).select(
-        "term", "docint", "tf", "doclen"
+        *keys, "term", "docint", "tf", "doclen"
     )
+
+    def per_key(df: DataFrame) -> DataFrame:
+        # one task, hence one file, per key value
+        return df.repartition(by) if by else df
+
     doclens = written.groupBy("docint").agg(F.sum("tf").cast("int").alias("doclen"))
     write_table(
-        docs.drop("doclen")  # all metadata columns flow into the row store
-        .join(doclens, "docint", "left")
-        .withColumn("doclen", F.coalesce(F.col("doclen"), F.lit(0))),
+        per_key(
+            docs.drop("doclen")  # all metadata columns flow into the row store
+            .join(doclens, "docint", "left")
+            .withColumn("doclen", F.coalesce(F.col("doclen"), F.lit(0)))
+        ),
         f"{path}/docs",
+        partition_by=keys or None,
         fmt=fmt,
     )
-    write_table(term_stats(written), f"{path}/terms", fmt=fmt)
-    stats = segment_stats(spark, path, fmt)
+    write_table(
+        term_stats(per_key(written), by),
+        f"{path}/terms",
+        partition_by=keys or None,
+        fmt=fmt,
+    )
+    stats = segment_stats(spark, path, fmt, by=by)
     if blocks:
         # block metadata uses this segment's doclen profile; pruning
         # bounds stay valid under later corpus growth via (max_tf,
         # min_dl) — see blocks.py / blockmax._block_ub_tfc
-        blk = build_blocks(written, stats.avg_doclen or 1.0)
+        if by:
+            blk = per_key(
+                build_blocks(
+                    written,
+                    {k: st.avg_doclen or 1.0 for k, st in stats.items()},
+                    by=by,
+                )
+            ).sortWithinPartitions(by, "term", "block_id")
+        else:
+            blk = build_blocks(written, stats.avg_doclen or 1.0)
         write_table(
             blk.withColumn("bucket", _term_bucket(n_buckets)) if n_buckets else blk,
             f"{path}/blocks",
-            partition_by=bucket_by,
+            partition_by=part_by,
             fmt=fmt,
         )
     return stats

@@ -25,6 +25,13 @@ Spark-native design:
   shard watermark = max (conv_id, turn_idx) already indexed; new local
   ids continue after the shard's ``next_id`` (insertion order, exactly
   the reference's append semantics);
+- a build or append writes the units of EVERY shard it touches in one
+  set of Spark jobs — the reference composes a batch's work units once,
+  then applies them (``MiruIndexer.index``, MiruIndexer.java:47-126):
+  one shard-keyed docint pass and one shard-partitioned segment write
+  into the store's ``_stage_tmp``, then each shard's unit is committed
+  on its own (tables moved under ``_delta_tmp``, one rename, one
+  manifest line), in shard order;
 - ``manifest.jsonl`` records one line per completed unit with lineage
   + metrics: shard, delta index, watermark, row/posting counts, build
   wall-time, files;
@@ -56,17 +63,18 @@ from miru_spark.indexing.build import (
     segment_stats,
     write_segment,
 )
+from miru_spark.session import local_df
 
 SHARD_BITS = 40
 
-# serializes manifest.jsonl appends across concurrent shard-build threads
+# serializes manifest.jsonl appends across concurrent shard-merge threads
 import threading
 
 _MANIFEST_LOCK = threading.Lock()
 
 # cross-PROCESS single-writer enforcement: depth registry (per store
 # abspath) makes the lockfile re-entrant within one process — in-process
-# concurrency (build(max_concurrent), repair→expunge) is by design and
+# concurrency (compact(max_concurrent), repair→expunge) is by design and
 # serialized where it matters by _MANIFEST_LOCK; the lockfile only
 # rejects a SECOND PROCESS writing the same store.
 _WRITER_DEPTH: dict[str, int] = {}
@@ -107,6 +115,67 @@ def check_additive(old, new) -> None:
             f"batch schema is not additive w.r.t. the store: "
             f"missing columns {missing}, retyped {changed}"
         )
+
+
+#: an empty lockfile younger than this is a writer between creating it
+#: and recording its pid — live, not stale
+LOCK_GRACE_S = 5.0
+
+
+def _read_lock(path: str):
+    """``(pid, stat)`` of a lockfile — pid None while empty or torn —
+    or None when there is no lockfile."""
+    try:
+        with open(path) as f:
+            st = os.fstat(f.fileno())
+            raw = f.read()
+    except FileNotFoundError:
+        return None
+    try:
+        return int(json.loads(raw)["pid"]), st
+    except (ValueError, KeyError, TypeError):
+        return None, st
+
+
+def _file_id(st: os.stat_result) -> tuple:
+    return (st.st_dev, st.st_ino, st.st_mtime_ns, st.st_size)
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)  # probe only; signal 0 delivers nothing
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        return True  # exists, but is not ours to probe
+    return True
+
+
+def _footer_schema_union(dirs: list[str]):
+    """Union of the Spark schemas recorded in the parquet footers of
+    one data file per directory (every file a single write makes has
+    the same schema), in first-seen column order — what a
+    ``mergeSchema`` read infers, without its Spark job. None if some
+    directory has no file with a recorded Spark schema."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    fields: dict = {}
+    for d in dirs:
+        try:
+            name = next(
+                n for n in sorted(os.listdir(d))
+                if n.endswith(".parquet") and not n.startswith((".", "_"))
+            )
+            meta = pq.read_metadata(os.path.join(d, name)).metadata or {}
+            schema = StructType.fromJson(
+                json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"])
+            )
+        except (OSError, StopIteration, KeyError, ValueError):
+            return None
+        for f in schema.fields:
+            fields.setdefault(f.name, f)
+    return StructType(list(fields.values()))
 
 
 def _align_block(local_id: int) -> int:
@@ -181,8 +250,8 @@ class SegmentStore:
         return out
 
     def _append_manifest(self, entry: dict) -> None:
-        # concurrent shard builds (build(max_concurrent>1)) append from
-        # several driver threads; serialize the file append
+        # concurrent shard merges (compact(max_concurrent>1)) append
+        # from several driver threads; serialize the file append
         with _MANIFEST_LOCK:
             os.makedirs(self.path, exist_ok=True)
             with open(self._manifest_path, "a") as f:
@@ -204,7 +273,9 @@ class SegmentStore:
         (stale lock after a crash — recover() then heals any torn
         commit). Re-entrant within one process via a depth registry,
         so nested write paths (repair→expunge, compact→merge_units)
-        and build(max_concurrent) threads share one acquisition."""
+        and compact(max_concurrent) threads share one acquisition.
+        Release unlinks the lockfile only while it still records this
+        process, so a lock another writer took over is left alone."""
         import contextlib
 
         @contextlib.contextmanager
@@ -222,53 +293,78 @@ class SegmentStore:
                     _WRITER_DEPTH[key] -= 1
                     if _WRITER_DEPTH[key] == 0:
                         del _WRITER_DEPTH[key]
-                        try:
-                            os.remove(self._lock_path)
-                        except OSError:
-                            pass
+                        held = _read_lock(self._lock_path)
+                        if held is not None and held[0] == os.getpid():
+                            try:
+                                os.remove(self._lock_path)
+                            except OSError:
+                                pass
 
         return guard()
 
     def _acquire_lockfile(self, max_steals: int = 3) -> None:
+        """Take the lockfile or raise :class:`ConcurrentWriterError`.
+
+        - a created lock counts only once a re-read finds our pid in it;
+        - a lock whose owner is alive, or which is still empty and
+          younger than ``LOCK_GRACE_S`` (its creator has not written its
+          pid yet), is live;
+        - a stale lock is stolen by renaming THAT file aside — checked
+          by its identity (device, inode, mtime, size) once moved — so
+          of two stealers only one moves it; the slower one, finding it
+          moved a fresh lock instead, links it back and re-probes."""
         os.makedirs(self.path, exist_ok=True)
-        for _ in range(max_steals):
-            try:
-                fd = os.open(
-                    self._lock_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY
-                )
-                with os.fdopen(fd, "w") as f:
-                    f.write(json.dumps({"pid": os.getpid()}))
-                return
-            except FileExistsError:
-                pass
-            try:
-                with open(self._lock_path) as f:
-                    owner = int(json.load(f)["pid"])
-            except (OSError, ValueError, KeyError, json.JSONDecodeError):
-                owner = None  # torn lock write: treat as stale
-            if owner == os.getpid():
-                return  # already ours (registry lost to a prior error)
-            if owner is not None:
+        me = os.getpid()
+        asides = []
+        try:
+            for i in range(max_steals):
                 try:
-                    os.kill(owner, 0)  # probe only; signal 0 delivers nothing
+                    fd = os.open(
+                        self._lock_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY
+                    )
+                except FileExistsError:
+                    pass
+                else:
+                    with os.fdopen(fd, "w") as f:
+                        f.write(json.dumps({"pid": me}))
+                held = _read_lock(self._lock_path)
+                if held is None:
+                    continue  # released meanwhile: create again
+                owner, seen = held
+                if owner == me:
+                    return
+                if owner is None:
+                    if time.time() - seen.st_mtime < LOCK_GRACE_S:
+                        raise ConcurrentWriterError(
+                            f"store {self.path} is being locked by another "
+                            f"writer (single-writer contract)"
+                        )
+                elif _pid_alive(owner):
                     raise ConcurrentWriterError(
                         f"store {self.path} is locked by live writer "
                         f"pid {owner} (single-writer contract)"
                     )
-                except ProcessLookupError:
-                    pass  # owner died: stale lock
-                except PermissionError:
-                    # pid exists but isn't ours to probe: assume live
-                    raise ConcurrentWriterError(
-                        f"store {self.path} is locked by writer pid "
-                        f"{owner} (single-writer contract)"
-                    )
-            # stale: remove and retry the exclusive create (a racing
-            # second stealer loses the O_EXCL and re-probes the winner)
-            try:
-                os.remove(self._lock_path)
-            except OSError:
-                pass
+                # stale (dead owner, or torn past its grace): move aside
+                aside = f"{self._lock_path}.stale-{me}-{i}"
+                try:
+                    os.rename(self._lock_path, aside)
+                except FileNotFoundError:
+                    continue
+                asides.append(aside)
+                if _file_id(os.stat(aside)) != _file_id(seen):
+                    # a faster stealer's fresh lock, not the stale one
+                    try:
+                        os.link(aside, self._lock_path)
+                    except FileExistsError:
+                        pass
+        finally:
+            # removed only now, so no new lock can reuse a moved
+            # file's inode while another stealer may still compare it
+            for aside in asides:
+                try:
+                    os.remove(aside)
+                except OSError:
+                    pass
         raise ConcurrentWriterError(
             f"could not acquire writer lock for {self.path}"
         )
@@ -286,54 +382,29 @@ class SegmentStore:
     # -- build -------------------------------------------------------------
 
     @_single_writer
-    def build(
-        self,
-        turns: DataFrame,
-        fail_after: int | None = None,
-        max_concurrent: int = 1,
-    ) -> None:
+    def build(self, turns: DataFrame, fail_after: int | None = None) -> None:
         """Full build, resumable: skips shards already in the manifest.
 
-        ``fail_after`` aborts after N shards (test hook for the
-        kill-and-resume scenario). ``max_concurrent`` > 1 submits that
-        many shard builds from concurrent driver threads — Spark
-        schedules jobs from separate threads simultaneously, so one
-        shard's write stage overlaps another's tokenize stage instead
-        of the cluster draining between serial jobs. Each shard's unit
-        is still an independent manifest entry (resumability is
-        per-shard either way); at very high shard counts batch the
-        range into groups of ``max_concurrent``.
+        Every missing shard's unit (delta 0, empty ones included) comes
+        out of ONE pass over ``turns`` (:meth:`_write_units`) and is then
+        committed on its own, in shard order, so a killed build re-runs
+        only the shards it had not committed. ``fail_after`` commits the
+        first N of them and then raises (test hook for the
+        kill-and-resume scenario).
         """
         self.recover()  # finish/sweep any crashed prior commit first
-        done = {s for s, e in self.shard_state().items() if e["delta"] == 0}
-        with_shard = turns.withColumn("_shard", shard_col(self.n_shards))
-        todo = [s for s in range(self.n_shards) if s not in done]
-        if fail_after is not None:
-            if fail_after < len(todo):
-                for s in todo[:fail_after]:
-                    self._build_unit(
-                        with_shard.where(F.col("_shard") == s).drop("_shard"),
-                        shard=s, delta=0,
-                    )
-                raise RuntimeError(f"injected failure after {fail_after} shards")
-        if max_concurrent <= 1:
-            for s in todo:
-                self._build_unit(
-                    with_shard.where(F.col("_shard") == s).drop("_shard"),
-                    shard=s, delta=0,
-                )
+        state = self.shard_state()
+        todo = [
+            s
+            for s in range(self.n_shards)
+            if s not in state and not self._finish_if_committed(s, 0)
+        ]
+        if not todo:
             return
-        from concurrent.futures import ThreadPoolExecutor
-
-        def one(s: int) -> None:
-            self._build_unit(
-                with_shard.where(F.col("_shard") == s).drop("_shard"),
-                shard=s, delta=0,
-            )
-
-        with ThreadPoolExecutor(max_workers=max_concurrent) as pool:
-            for f in [pool.submit(one, s) for s in todo]:
-                f.result()  # surface the first failure
+        rows = turns.withColumn("_shard", shard_col(self.n_shards))
+        if len(todo) < self.n_shards:
+            rows = rows.where(F.col("_shard").isin(todo))
+        self._write_units(rows, build_shards=todo, fail_after=fail_after)
 
     @_single_writer
     def append(self, new_turns: DataFrame) -> None:
@@ -341,10 +412,11 @@ class SegmentStore:
         shard's watermark, as a new delta segment per touched shard.
 
         The per-shard watermark predicate is applied via ONE broadcast
-        join against the (tiny, driver-side) manifest state, and a single
-        ``groupBy(_shard).count()`` job decides which shards have fresh
-        rows — an empty append costs one Spark job total, not one
-        ``limit(1).count()`` probe per shard."""
+        join against the (tiny, driver-side) manifest state, and every
+        touched shard's unit comes out of one pass over the batch
+        (:meth:`_write_units`): the cost follows the batch, not the
+        number of shards it touches. An empty append stops after the
+        docint totals and commits nothing."""
         self.recover()
         self._check_batch_schema(new_turns)
         state = self.shard_state()
@@ -357,9 +429,7 @@ class SegmentStore:
         fresh = with_shard
         if wm_rows:
             wm = F.broadcast(
-                self.spark.createDataFrame(
-                    wm_rows, "_shard int, _wc string, _wt int"
-                )
+                local_df(self.spark, wm_rows, "_shard int, _wc string, _wt int")
             )
             fresh = (
                 with_shard.join(wm, "_shard", "left")
@@ -373,58 +443,114 @@ class SegmentStore:
                 )
                 .drop("_wc", "_wt")
             )
-        self._append_raw(fresh)
+        self._write_units(fresh)
 
     def _check_batch_schema(self, batch: DataFrame) -> None:
         """Gate an incoming batch on additive schema evolution
         (MiruSchema.checkAdditive parity): compare against the UNION of
-        every live unit's docs schema (one mergeSchema footer read, no
-        Spark job), minus the engine-derived columns. The union is the
-        store's current schema — checking a single (oldest) unit would
-        let a batch silently drop a column a LATER additive append
-        introduced; the reference checks against the latest registered
-        schema (MiruSchema.java:303-314)."""
+        every live unit's docs schema, minus the engine-derived columns.
+        The union is the store's current schema — checking a single
+        (oldest) unit would let a batch silently drop a column a LATER
+        additive append introduced; the reference checks against the
+        latest registered schema (MiruSchema.java:303-314).
+
+        No Spark job: each unit's schema is the one Spark recorded in
+        the footer of a docs file (all files of a unit share it). A unit
+        without such a footer falls back to a ``mergeSchema`` read of
+        every unit, which infers the schema in a Spark job."""
         units = self.live_units()
         if not units:
             return
         from pyspark.sql.types import StructType
 
-        stored = (
-            self.spark.read.option("mergeSchema", True)
-            .parquet(*[f"{u}/docs" for u in units])
-            .schema
-        )
+        stored = _footer_schema_union([f"{u}/docs" for u in units])
+        if stored is None:
+            stored = (
+                self.spark.read.option("mergeSchema", True)
+                .parquet(*[f"{u}/docs" for u in units])
+                .schema
+            )
         old = StructType(
             [f for f in stored.fields if f.name not in ("docint", "doclen")]
         )
         check_additive(old, batch.schema)
 
-    def _append_raw(self, with_shard: DataFrame) -> None:
-        """Index ``with_shard`` rows (a ``_shard`` column routes them) as
-        one new delta unit per touched shard. NO watermark filter — the
-        caller arbitrates freshness (``append`` filters by watermark,
-        ``repair`` by version)."""
+    def _write_units(
+        self,
+        rows: DataFrame,
+        build_shards: list[int] | None = None,
+        fail_after: int | None = None,
+    ) -> None:
+        """Index ``rows`` (a ``_shard`` column routes them) as one new
+        unit per shard, every unit from ONE set of Spark jobs. NO
+        watermark filter — the caller arbitrates freshness (``append``
+        filters by watermark, ``repair`` by version).
+
+        ``build_shards`` lists the shards that get their ``delta_0000``
+        unit, rows or not (:meth:`build`); otherwise each shard the rows
+        touch gets its next delta. Local ids are dense in (conv_id,
+        turn_idx) order within each shard, continuing after the shard's
+        writer cursor (block-aligned): one ``with_docint`` keyed by
+        shard. One keyed :func:`write_segment` stages every unit's
+        tables under the store's ``_stage_tmp`` and returns each shard's
+        :func:`segment_stats`; :meth:`_commit_unit` then commits the
+        shards one by one, in shard order."""
+        import shutil
+
+        t0 = time.time()
         state = self.shard_state()
-        touched = sorted(
-            r["_shard"]
-            for r in with_shard.groupBy("_shard").count().collect()
-            if r["count"] > 0
+        cursor = {
+            s: _align_block(state[s]["next_id"]) if s in state else 0
+            for s in range(self.n_shards)
+        }
+        ranked = with_docint(
+            rows,
+            by="_shard",
+            start={s: (s << SHARD_BITS) + c for s, c in cursor.items()},
         )
-        for s in touched:
-            st = state.get(s)
+        touched = sorted(s for s, n in ranked._docint_rows.items() if n > 0)
+        if build_shards is not None:
+            deltas = {s: 0 for s in build_shards}
+        else:
             # delta from max(manifest, on-disk units): after recover()
             # they agree, but a merged unit whose manifest write lost a
             # race must never be shadowed by a same-index delta (the
             # live-unit rule would hide the appended rows forever)
-            next_delta = (
-                max(st["delta"], self._max_disk_unit(s)) + 1 if st else 0
-            )
-            self._build_unit(
-                with_shard.where(F.col("_shard") == s).drop("_shard"),
-                shard=s,
-                delta=next_delta,
-                st=st,
-            )
+            deltas = {
+                s: max(state[s]["delta"], self._max_disk_unit(s)) + 1
+                if s in state
+                else 0
+                for s in touched
+            }
+        stage = self._stage_dir
+        shutil.rmtree(stage, ignore_errors=True)
+        stats: dict = {}
+        try:
+            if touched:
+                stats = write_segment(
+                    postings_flat(ranked, positions=self.positions).withColumn(
+                        "_shard",
+                        F.shiftright("docint", SHARD_BITS).cast("int"),
+                    ),
+                    ranked,
+                    stage,
+                    blocks=self.blocks,
+                    by="_shard",
+                )
+            for i, s in enumerate(sorted(deltas)):
+                if fail_after is not None and i == fail_after:
+                    raise RuntimeError(f"injected failure after {fail_after} shards")
+                self._commit_unit(
+                    s, deltas[s], stats.get(s), state.get(s), cursor[s],
+                    ranked, t0,
+                )
+        finally:
+            release_docint(ranked)
+        shutil.rmtree(stage, ignore_errors=True)
+
+    @property
+    def _stage_dir(self) -> str:
+        return os.path.join(self.path, "_stage_tmp")
 
     @_single_writer
     def repair(self, repairs: DataFrame, version_col: str = "ts") -> None:
@@ -476,7 +602,7 @@ class SegmentStore:
         drop = accepted.where(F.col("docint").isNotNull()).select("docint")
         if drop.limit(1).count() > 0:
             self.expunge(drop)
-        self._append_raw(
+        self._write_units(
             accepted.drop("docint", "_v_old", "_v_new").withColumn(
                 "_shard", shard_col(self.n_shards)
             )
@@ -486,69 +612,71 @@ class SegmentStore:
     def _unit_dir(self, shard: int, delta: int) -> str:
         return os.path.join(self.path, f"shard={shard}", f"delta_{delta:04d}")
 
-    def _build_unit(
+    def _finish_if_committed(self, shard: int, delta: int) -> bool:
+        """True if the shard's ``delta_{delta}`` unit is already on disk.
+        A unit rename-committed by a crashed run whose manifest append
+        was lost gets its manifest entry here instead of being
+        re-indexed. Only truly UNmanifested units are finished — a unit
+        with a live manifest entry (e.g. build() re-entered on a store
+        that has later appends) must not be re-appended, or the
+        duplicate entry would double-count into the per-shard
+        n_docs/avg_doclen folds on load."""
+        if not os.path.isdir(self._unit_dir(shard, delta)):
+            return False
+        if not any(
+            e["shard"] == shard and e["delta"] == delta for e in self.manifest()
+        ):
+            self._finish_delta_commit(shard, self.shard_state().get(shard), delta)
+        return True
+
+    def _commit_unit(
         self,
-        rows: DataFrame,
         shard: int,
         delta: int,
-        st: dict | None = None,
+        stats: SegmentStats | None,
+        st: dict | None,
+        cursor: int,
+        ranked: DataFrame,
+        t0: float,
     ) -> None:
-        """Index ``rows`` as the shard's ``delta_{delta}`` unit, after
-        the shard's latest manifest state ``st`` (None for a new shard).
+        """Commit the shard's staged tables as its ``delta_{delta}`` unit,
+        after the shard's latest manifest state ``st`` (None for a new
+        shard). A shard without staged postings (no rows, or no tokens)
+        is written on its own from ``ranked``, so every unit has every
+        table.
 
-        Crash-atomic like the merge paths: every file is written under
+        Crash-atomic like the merge paths: the tables are moved under
         the shard's ``_delta_tmp`` and the unit is COMMITTED by a single
-        ``os.rename`` — a crash mid-write leaves only a tmp dir (never
-        served; swept by :meth:`recover`), and a crash between the
-        rename and the manifest append is finished by
-        :meth:`_finish_delta_commit` (invoked from ``recover`` or on
-        re-entry here), which recomputes the manifest entry from the
-        committed unit with the same :meth:`_delta_entry`. Without this,
-        a torn append would leave a partial (unloadable) unit — or, once
-        retried, the same rows indexed twice under the SAME docint
-        range, since the retry's watermark predates the orphan.
+        ``os.rename`` — a crash before it leaves only tmp/stage dirs
+        (never served; swept by :meth:`recover`), and a crash between
+        the rename and the manifest append is finished by
+        :meth:`_finish_delta_commit` (invoked from ``recover``), which
+        recomputes the manifest entry from the committed unit with the
+        same :meth:`_delta_entry`. Without this, a torn append would
+        leave a partial (unloadable) unit — or, once retried, the same
+        rows indexed twice under the SAME docint range, since the
+        retry's watermark predates the orphan.
         """
         import shutil
 
-        t0 = time.time()
         out = self._unit_dir(shard, delta)
-        if os.path.isdir(out):
-            # rename-committed by a crashed run whose manifest append
-            # was lost: finish the manifest instead of re-indexing.
-            # Only truly UNmanifested units are finished — a unit with a
-            # live manifest entry (e.g. build() re-entered on a store
-            # that has later appends) must not be re-appended, or the
-            # duplicate entry would double-count into the per-shard
-            # n_docs/avg_doclen folds on load.
-            if not any(
-                e["shard"] == shard and e["delta"] == delta for e in self.manifest()
-            ):
-                self._finish_delta_commit(shard, self.shard_state().get(shard), delta)
-            return
         tmp = os.path.join(os.path.dirname(out), "_delta_tmp")
         shutil.rmtree(tmp, ignore_errors=True)
-        # local dense id in (conv_id, turn_idx) order, continuing after
-        # the shard's writer cursor (block-aligned). with_docint's
-        # conv-offset decomposition avoids a single-partition global
-        # window even within the shard.
-        base_local_id = _align_block(st["next_id"]) if st else 0
-        ranked = with_docint(rows)
-        base = ranked.withColumn(
-            "docint",
-            (
-                F.lit(shard << SHARD_BITS) + F.lit(base_local_id) + F.col("docint")
-            ).cast("long"),
-        )
-        try:
+        tables = ["postings", "docs", "terms"] + (["blocks"] if self.blocks else [])
+        staged = [os.path.join(self._stage_dir, t, f"_shard={shard}") for t in tables]
+        if stats is not None and all(os.path.isdir(p) for p in staged):
+            os.makedirs(tmp)
+            for t, p in zip(tables, staged):
+                os.rename(p, os.path.join(tmp, t))
+        else:
+            rows = ranked.where(F.col("_shard") == shard).drop("_shard")
             stats = write_segment(
-                postings_flat(base, positions=self.positions),
-                base,
+                postings_flat(rows, positions=self.positions),
+                rows,
                 tmp,
                 blocks=self.blocks,
             )
-        finally:
-            release_docint(ranked)
-        entry = self._delta_entry(shard, delta, tmp, stats, st, base_local_id)
+        entry = self._delta_entry(shard, delta, tmp, stats, st, cursor)
         entry["build_ms"] = int((time.time() - t0) * 1000)
         os.rename(tmp, out)  # commit point
         self._append_manifest(entry)
@@ -820,8 +948,8 @@ class SegmentStore:
         its output at least one level.
 
         ``max_concurrent`` > 1 runs that many SHARDS' merge chains from
-        concurrent driver threads (same pattern as
-        ``build(max_concurrent)``): shards are disjoint directories and
+        concurrent driver threads (Spark schedules jobs from separate
+        threads side by side): shards are disjoint directories and
         manifest appends are lock-serialized, so shard-level
         parallelism is safe; merges WITHIN a shard stay ordered because
         later plans read the units earlier merges produce."""
@@ -935,7 +1063,7 @@ class SegmentStore:
         """Manifest a rename-committed ``delta_{delta}`` unit whose
         manifest append was lost to a crash. The entry is recomputed
         from the unit itself by :meth:`_delta_entry`, the computation
-        ``_build_unit`` records, so recovery needs nothing from the
+        ``_commit_unit`` records, so recovery needs nothing from the
         crashed process. The entry is tagged ``recovered`` for
         lineage."""
         out = self._unit_dir(shard, delta)
@@ -975,14 +1103,18 @@ class SegmentStore:
         ``build``/``load``/``append``/``expunge``.
 
         ``sweep_tmp=False`` (the read-only ``load`` path) skips the
-        ``_delta_tmp`` sweep: tmp dirs are only dead weight when no
-        writer is alive, and a concurrent writer mid-``_build_unit``
-        would lose its in-flight files to the sweep. Write paths keep
-        the sweep — they hold the single-writer role by contract (the
-        manifest lock is in-process; cross-process writers must be
-        externally serialized, one writer per store)."""
+        sweep of ``_delta_tmp`` and of the store's ``_stage_tmp``: tmp
+        dirs are only dead weight when no writer is alive, and a
+        concurrent writer mid-``_write_units`` would lose its in-flight
+        files to the sweep. Write paths keep the sweep — they hold the
+        single-writer role by contract (the manifest lock is in-process;
+        cross-process writers must be externally serialized, one writer
+        per store)."""
         import shutil
 
+        if sweep_tmp:
+            # staged units of a writer that died before committing them
+            shutil.rmtree(self._stage_dir, ignore_errors=True)
         state = self.shard_state()
         for s in range(self.n_shards):
             sdir = os.path.join(self.path, f"shard={s}")
@@ -1166,8 +1298,8 @@ class SegmentStore:
         """Serving handle over the live store, or — with ``as_of`` — over
         the store as of an earlier :meth:`snapshot_id` (raises
         ``SnapshotExpiredError`` if compaction has rewritten it)."""
-        # read-only path: finish orphaned commits but leave _delta_tmp
-        # alone — a concurrent writer may be mid-_build_unit
+        # read-only path: finish orphaned commits but leave tmp dirs
+        # alone — a concurrent writer may be mid-_write_units
         self.recover(sweep_tmp=False)
         man = self.manifest()
         if as_of is not None:

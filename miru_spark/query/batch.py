@@ -61,18 +61,7 @@ from miru_spark.query.bm25 import (
     search_min_should_match,
 )
 from miru_spark.query.parser import parse_query
-
-
-def _local_df(spark, rows: list, schema: str) -> DataFrame:
-    """A small driver-side relation, converted through Arrow in the JVM.
-    ``spark.createDataFrame`` of a plain list re-pickles the rows in
-    Python workers each time the plan runs, so a batch tick on a session
-    with no warm workers paid their start-up."""
-    import pandas as pd
-    from pyspark.sql.types import _parse_datatype_string
-
-    st = _parse_datatype_string(schema)
-    return spark.createDataFrame(pd.DataFrame(rows, columns=st.names), st)
+from miru_spark.session import local_df
 
 
 def _mask_docs_pairs(
@@ -332,7 +321,7 @@ def search_batch(
     # fused and phrase blocks — masked/tombstoned/ranked together below
     pre_rank: list[DataFrame] = []
     if fused_rows:
-        leaves_df = _local_df(
+        leaves_df = local_df(
             spark,
             fused_rows,
             "qid string, leaf_id int, kind string, value string, "
@@ -432,7 +421,7 @@ def search_batch(
         pre_rank.append(scored.select("qid", "docint", "score", "_k"))
 
     if phrase_rows:
-        pl = _local_df(
+        pl = local_df(
             spark,
             phrase_rows,
             "qid string, off int, term string, boost double, k int, "
@@ -552,7 +541,7 @@ def search_batch(
             for p in pre_rank[1:]:
                 all_scored = all_scored.unionByName(p)
         else:  # pure-metadata OR queries only
-            all_scored = _local_df(
+            all_scored = local_df(
                 spark,
                 [], "qid string, docint long, score double, _k int"
             )

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -78,3 +78,15 @@ def _master_cores(master: str, default: int) -> int:
         except ValueError:
             return default
     return default
+
+
+def local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """A small driver-side relation, converted through Arrow in the JVM.
+    ``spark.createDataFrame`` of a plain list re-pickles the rows in
+    Python workers each time the plan runs, so a plan over it on a
+    session with no warm workers pays their start-up."""
+    import pandas as pd
+    from pyspark.sql.types import _parse_datatype_string
+
+    st = _parse_datatype_string(schema)
+    return spark.createDataFrame(pd.DataFrame(rows, columns=st.names), st)

@@ -145,25 +145,54 @@ def test_merge_is_crash_atomic(spark, tiny_turns, tiny_pdf, tmp_path):
     assert store.load().n_docs == len(tiny_pdf)
 
 
-def test_concurrent_shard_build_equivalent(spark, tiny_turns, tiny_pdf, tmp_path):
-    """Thread-pooled shard builds (concurrent Spark jobs) produce the
-    same store as the serial loop — same manifest coverage, same
-    answers."""
-    serial = _store(spark, tmp_path / "ser")
-    serial.build(tiny_turns)
-    conc = _store(spark, tmp_path / "conc")
-    conc.build(tiny_turns, max_concurrent=4)
-    m = conc.manifest()
-    assert sorted(e["shard"] for e in m) == list(range(N_SHARDS))
-    assert sum(e["n_turns"] for e in m) == len(tiny_pdf)
-    a = serial.load()
-    b = conc.load()
-    assert b.n_docs == a.n_docs
-    ga = search(a, "w00001 AND w00004", k=10).toPandas()
-    gb = search(b, "w00001 AND w00004", k=10).toPandas()
-    assert sorted(zip(ga["conv_id"], ga["turn_idx"])) == sorted(
-        zip(gb["conv_id"], gb["turn_idx"])
+def test_one_pass_units_route_and_rank(spark, tiny_turns, tmp_path):
+    """Build and append write every shard's unit in one pass: each
+    shard's units hold exactly the rows shard_col routes to it, local
+    docints are dense in (conv_id, turn_idx) order from the shard's
+    block-aligned cursor, and the store answers like an index built
+    over the whole table."""
+    from miru_spark.index import InvertedIndex
+    from miru_spark.indexing.incremental import SHARD_BITS, _align_block, shard_col
+
+    half1 = tiny_turns.where("conv_id < 'conv00000050'")
+    half2 = tiny_turns.where("conv_id >= 'conv00000050'")
+    store = _store(spark, tmp_path / "seg")
+    store.build(half1)
+    store.append(half2)
+    routed = (
+        tiny_turns.select("conv_id", "turn_idx", shard_col(N_SHARDS).alias("s"))
+        .toPandas()
     )
+    half = routed["conv_id"] < "conv00000050"
+    for s in range(N_SHARDS):
+        cursor = 0
+        for delta, part in ((0, half), (1, ~half)):
+            got = (
+                spark.read.parquet(f"{store._unit_dir(s, delta)}/docs")
+                .select("conv_id", "turn_idx", "docint")
+                .toPandas()
+                .sort_values(["conv_id", "turn_idx"])
+            )
+            want = routed[part & (routed["s"] == s)].sort_values(
+                ["conv_id", "turn_idx"]
+            )
+            assert list(zip(got["conv_id"], got["turn_idx"])) == list(
+                zip(want["conv_id"], want["turn_idx"])
+            ), (s, delta)
+            assert list(got["docint"]) == [
+                (s << SHARD_BITS) + cursor + i for i in range(len(got))
+            ], (s, delta)
+            cursor = _align_block(cursor + len(got))
+    idx = store.load()
+    ref = InvertedIndex.build(tiny_turns)
+    assert idx.n_docs == ref.n_docs
+    assert idx.avg_doclen == pytest.approx(ref.avg_doclen)
+    for q in ["w00001 AND w00004", "w00003 OR w09999", "w00000"]:
+        a = search(idx, q, k=2000).select("conv_id", "turn_idx", "score")
+        b = search(ref, q, k=2000).select("conv_id", "turn_idx", "score")
+        ga = sorted((r[0], r[1], round(r[2], 9)) for r in a.collect())
+        gb = sorted((r[0], r[1], round(r[2], 9)) for r in b.collect())
+        assert ga == gb, q
 
 
 def test_snapshot_as_of(spark, tiny_turns, tiny_pdf, tmp_path):
@@ -421,3 +450,163 @@ def test_write_paths_release_persisted_relations(spark, tiny_turns, tmp_path):
     assert store.compact(merge_factor=2) > 0
     store.expunge(store.load().docs.where(F.col("turn_idx") == 0).select("docint"))
     assert persisted() <= start
+
+
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs ``fn`` starts, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_append_jobs_independent_of_shards(spark, tiny_turns, tmp_path):
+    """One append writes every touched shard's unit from one set of
+    Spark jobs: the same batch into 4 shards starts about as many jobs
+    as into 1 (a pass per shard started ~26 more jobs per shard)."""
+    first = tiny_turns.where("conv_id < 'conv00000050'")
+    batch = tiny_turns.where("conv_id >= 'conv00000050'")
+    jobs = {}
+    for n in (1, 4):
+        store = SegmentStore(spark, str(tmp_path / f"s{n}"), n_shards=n)
+        store.build(first)
+        jobs[n] = _jobs_of(spark, lambda: store.append(batch))
+        assert store.load().n_docs == tiny_turns.count()
+    assert jobs[4] <= jobs[1] + 3, jobs
+
+
+def test_schema_gate_runs_no_spark_job(spark, tiny_turns, tmp_path):
+    """The additive-schema gate reads the units' docs schemas from
+    their parquet footers, not through a mergeSchema Spark job."""
+    import pyspark.sql.functions as F
+
+    store = _store(spark, tmp_path / "seg")
+    store.build(tiny_turns.where("conv_id < 'conv00000050'"))
+    store.append(
+        tiny_turns.where("conv_id >= 'conv00000050'").withColumn(
+            "source_tag", F.lit("b")
+        )
+    )
+    batch = tiny_turns.withColumn("source_tag", F.lit("c"))
+    assert _jobs_of(spark, lambda: store._check_batch_schema(batch)) == 0
+    from miru_spark.indexing.incremental import SchemaNotAdditiveError
+
+    with pytest.raises(SchemaNotAdditiveError, match="source_tag"):
+        store._check_batch_schema(tiny_turns)
+
+
+def _write_lock(path, pid):
+    """Replace the lockfile atomically with one recording ``pid``."""
+    import json
+    import os
+
+    with open(path + ".new", "w") as f:
+        f.write(json.dumps({"pid": pid}))
+    os.replace(path + ".new", path)
+
+
+def _lock_pid(path):
+    import json
+
+    with open(path) as f:
+        return json.load(f)["pid"]
+
+
+@pytest.fixture()
+def live_pid():
+    """The pid of a live process other than this one."""
+    import subprocess
+    import sys
+
+    p = subprocess.Popen([sys.executable, "-c", "import time; time.sleep(120)"])
+    yield p.pid
+    p.kill()
+    p.wait()
+
+
+@pytest.fixture()
+def dead_pid():
+    import subprocess
+    import sys
+
+    p = subprocess.Popen([sys.executable, "-c", "pass"])
+    p.wait()
+    return p.pid
+
+
+def test_lock_steal_race_keeps_faster_stealer(
+    spark, tmp_path, monkeypatch, live_pid, dead_pid
+):
+    """Two processes find the same dead owner. The faster one steals the
+    lock between the slower one's probe and its steal; the slower one
+    must not remove the fresh lock and take it too."""
+    import os
+
+    from miru_spark.indexing.incremental import ConcurrentWriterError
+
+    store = _store(spark, tmp_path / "race")
+    os.makedirs(store.path)
+    lock = store._lock_path
+    _write_lock(lock, dead_pid)
+    real_kill = os.kill
+    fired = []
+
+    def kill(pid, sig):
+        if pid == dead_pid and sig == 0 and not fired:
+            fired.append(1)
+            # the faster stealer: moves the stale lock aside, takes it
+            os.rename(lock, lock + ".faster")
+            _write_lock(lock, live_pid)
+            os.remove(lock + ".faster")
+        return real_kill(pid, sig)
+
+    monkeypatch.setattr(os, "kill", kill)
+    with pytest.raises(ConcurrentWriterError):
+        with store._writer_lock():
+            pass
+    assert fired
+    assert _lock_pid(lock) == live_pid
+
+
+def test_lock_torn_is_live_during_grace(spark, tmp_path, dead_pid):
+    """An empty lockfile is a writer that has created it and not yet
+    recorded its pid: live while young, stale (stolen) once old."""
+    import os
+    import time
+
+    from miru_spark.indexing.incremental import ConcurrentWriterError
+
+    store = _store(spark, tmp_path / "torn")
+    os.makedirs(store.path)
+    lock = store._lock_path
+    open(lock, "w").close()
+    with pytest.raises(ConcurrentWriterError):
+        with store._writer_lock():
+            pass
+    assert os.path.exists(lock) and os.path.getsize(lock) == 0
+    old = time.time() - 3600  # far past any grace period
+    os.utime(lock, (old, old))
+    with store._writer_lock():
+        assert _lock_pid(lock) == os.getpid()
+    assert not os.path.exists(lock)
+    # a dead owner's lock is stolen as before
+    _write_lock(lock, dead_pid)
+    with store._writer_lock():
+        assert _lock_pid(lock) == os.getpid()
+    assert not os.path.exists(lock)
+
+
+def test_lock_release_spares_a_lock_taken_over(spark, tmp_path, live_pid):
+    """Release unlinks the lockfile only while it records this process:
+    a lock another writer holds by then stays."""
+    import os
+
+    store = _store(spark, tmp_path / "rel")
+    with store._writer_lock():
+        _write_lock(store._lock_path, live_pid)
+    assert _lock_pid(store._lock_path) == live_pid
